@@ -1,12 +1,15 @@
 package graft
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — runs every declared query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Results go to the `noop` sink so the WHOLE plan
+/** Benchmark main — the one harness that times registry entries on
+  * SPARK_GRAFT_SF_DIR. Results go to the `noop` sink so the WHOLE plan
   * (projections included) executes — `count()` would let Spark skip
   * expression evaluation entirely.
   *
+  * With no arguments it times every entry and prints one JSON line.
   * Measurement protocol (drift-proofing): one warmup pass absorbs JIT +
   * codegen + plan-cache + file-listing cost, then THREE steady passes; the
   * reported per-entry number is the MEDIAN of the three — single-shot
@@ -16,7 +19,17 @@ import org.apache.spark.sql.SparkSession
   * ...): extension chunks first, a q-surface line, then the FINAL line — a
   * dense all-entry median array in sorted-entry-name order, ~1.6k chars, so
   * the 2000-char log tail always captures EVERY per-entry median (see the
-  * emission-contract comment at the bottom). */
+  * emission-contract comment at the bottom).
+  *
+  * With entry names as arguments it times each named entry in isolation
+  * (same protocol, one entry at a time: a warmup run, then the median of
+  * the steady runs), appends `TIMING <name> <median>` to /tmp/timings.txt
+  * — the isolated log TIMING_DELTA compares against — and prints the
+  * entry's exact execution shape as
+  * `JOBCOUNT <name> jobs= stages= tasks= wall=` for its first steady run.
+  * Wall medians drift with JVM/JIT/load; job and stage counts do not, so
+  * a "this change removes N redundant passes" claim is checkable
+  * before/after. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -27,6 +40,18 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.ensureConfs(spark)
+
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
+    val tasks = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(s.stageInfo.numTasks.toLong)
+      }
+    })
 
     // Release per-entry state so one entry's caches can't pollute the next
     // entry's number: the X-operators localCheckpoint their (small) results,
@@ -41,30 +66,80 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
 
-    def time(fn: => Unit): Double = {
+    // The listener bus delivers events asynchronously: the isolated mode
+    // waits for the previous run's stragglers before resetting the counters
+    // and for this run's before reading them.
+    def drain(): Unit = if (args.nonEmpty) Thread.sleep(200)
+
+    /** One run of an entry: build + execute to the noop sink (timed, -1 on
+      * failure), the jobs/stages/tasks it launched, then the state release. */
+    final case class Run(sec: Double, jobs: Int, stages: Int, tasks: Long)
+    def runEntry(name: String): Run = {
+      drain()
+      jobs.set(0); stages.set(0); tasks.set(0)
       val t0 = System.nanoTime()
-      try fn catch { case e: Throwable =>
-        System.err.println(s"[bench] failed: ${e.getMessage}"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    def onePass(): Seq[(String, Double)] = ordered.map { case (name, fn) =>
-      val t = time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      val sec =
+        try {
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
+      drain()
+      val run = Run(sec, jobs.get, stages.get, tasks.get)
       releaseState()
-      name -> t
+      run
     }
 
-    val warmup = onePass()
-    val passes = Seq.fill(steadyPasses)(onePass())
     def median(vs: Seq[Double]): Double = {
       val s = vs.sorted; s(s.length / 2)
     }
+    def fmt(v: Double): String = f"$v%.3f"
+
+    // ALL structured output goes straight to the process file descriptors,
+    // never through System.out: under an in-process sbt `runMain`,
+    // System.out is replaced by sbt's logger, which (a) prefixes every line
+    // with "[info] " and (b) flushes asynchronously AFTER the main returns —
+    // both defeat a downstream parser that reads the LAST stdout line as
+    // JSON. The original fds are untouched by that capture, so writing to
+    // FileDescriptor.out lands bare lines in the real stdout in program
+    // order. Standalone (plain java / spark-submit) these fds ARE
+    // System.out/err, and because we never ALSO println the same payload,
+    // each line is emitted exactly once in either environment. The streams
+    // are held in vals and never closed — closing a
+    // FileOutputStream(FileDescriptor.out) closes fd 1 JVM-wide.
+    val rawOut = new java.io.PrintStream(
+      new java.io.FileOutputStream(java.io.FileDescriptor.out), true, "UTF-8")
+    val rawErr = new java.io.PrintStream(
+      new java.io.FileOutputStream(java.io.FileDescriptor.err), true, "UTF-8")
+
+    if (args.nonEmpty) {
+      val log = new java.io.PrintWriter(
+        new java.io.FileWriter("/tmp/timings.txt", true), true)
+      try args.foreach { n =>
+        val warm = runEntry(n) // warmup: JIT + codegen + file listing
+        val steady = Seq.fill(steadyPasses)(runEntry(n))
+        if ((warm +: steady).exists(_.sec < 0)) log.println(s"TIMING $n FAILED")
+        else {
+          log.println(f"TIMING $n ${median(steady.map(_.sec))}%.2f")
+          val c = steady.head
+          rawOut.println(f"JOBCOUNT $n jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks} wall=${c.sec}%.2f")
+        }
+      } finally log.close()
+      spark.stop()
+      return
+    }
+
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    def onePass(): Seq[(String, Double)] =
+      ordered.map { case (name, _) => name -> runEntry(name).sec }
+
+    val warmup = onePass()
+    val passes = Seq.fill(steadyPasses)(onePass())
     val results = ordered.map { case (name, _) =>
       name -> median(passes.map(_.toMap.apply(name)))
     }
 
-    def fmt(v: Double): String = f"$v%.3f"
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -82,7 +157,7 @@ object Bench {
     val meds = results.map { case (k, v) => "\"" + shortName(k) + "\":" + fmt(v) }
       .mkString("{", ",", "}")
 
-    // Steady-state guard: diff the medians against the BenchOne isolated
+    // Steady-state guard: diff the medians against the isolated (named-entry)
     // timing log when one exists — a mechanical tripwire for measurement
     // artifacts (entry >1.3× its isolated number AND >0.3s absolute drift).
     val isoLog = new java.io.File("/tmp/timings.txt")
@@ -107,23 +182,6 @@ object Bench {
     System.err.println(s"TIMING_DELTA $delta")
 
     spark.stop()
-
-    // ALL structured output goes straight to the process file descriptors,
-    // never through System.out: under an in-process sbt `runMain`,
-    // System.out is replaced by sbt's logger, which (a) prefixes every line
-    // with "[info] " and (b) flushes asynchronously AFTER the main returns —
-    // both defeat a downstream parser that reads the LAST stdout line as
-    // JSON. The original fds are untouched by that capture, so writing to
-    // FileDescriptor.out lands bare lines in the real stdout in program
-    // order. Standalone (plain java / spark-submit) these fds ARE
-    // System.out/err, and because we never ALSO println the same payload,
-    // each line is emitted exactly once in either environment. The streams
-    // are held in vals and never closed — closing a
-    // FileOutputStream(FileDescriptor.out) closes fd 1 JVM-wide.
-    val rawOut = new java.io.PrintStream(
-      new java.io.FileOutputStream(java.io.FileDescriptor.out), true, "UTF-8")
-    val rawErr = new java.io.PrintStream(
-      new java.io.FileOutputStream(java.io.FileDescriptor.err), true, "UTF-8")
 
     rawOut.println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","first_pass_total":${fmt(warmTotal)},"passes":${steadyPasses + 1},"stat":"median_of_$steadyPasses","medians":$meds}""")
     // The medians again at the very END of stdout, AND as a file. The log

@@ -118,7 +118,16 @@ object SimilaritySearch {
     graft.plans.HashExpressions.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"))
     val q = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"))
-    val paired = c.crossJoin(broadcast(q))
+    cosineTopK(c.crossJoin(broadcast(q)), k, excludeSelf)
+  }
+
+  /** The exact re-rank every many-query search ends in: drop self pairs
+    * (when asked), score each (query, candidate) pair of `paired` — columns
+    * `query_id`/`__qv`, `corpus_id`/`__cv` — with the native cosine, and
+    * keep each query's top k by (score DESC, corpus_id) as
+    * (query_id, corpus_id, score, rank). */
+  private def cosineTopK(paired: DataFrame, k: Int,
+                         excludeSelf: Boolean = true): DataFrame = {
     val scored = (if (excludeSelf) paired.where(col("query_id") =!= col("corpus_id"))
                   else paired)
       .withColumn("score", call_function("graft_cosine", col("__qv"), col("__cv")))
@@ -151,13 +160,7 @@ object SimilaritySearch {
             .as("__bucket"))
     // exact rerank with the NATIVE cosine (one call per candidate, primitive
     // loop) — the interpreted HOF form costs 3 lambda calls × dim per pair
-    val scored = qb.join(cb, "__bucket")
-      .where(col("query_id") =!= col("corpus_id"))
-      .withColumn("score", call_function("graft_cosine", col("__qv"), col("__cv")))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("corpus_id"))
-    scored.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .select(col("query_id"), col("corpus_id"), col("score"), col("__rn").as("rank"))
+    cosineTopK(qb.join(cb, "__bucket"), k)
   }
 
   /** IVF (inverted-file) ANN: a data-adaptive coarse quantizer — `nlist`
@@ -260,13 +263,7 @@ object SimilaritySearch {
     val queryCells = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"),
         explode(call_function("graft_nearest_cells", col(vecCol), cents, lit(nprobe)))
           .as("__cell"))
-    val scored = queryCells.join(corpusCell, "__cell")
-      .where(col("query_id") =!= col("corpus_id"))
-      .withColumn("score", call_function("graft_cosine", col("__qv"), col("__cv")))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("corpus_id"))
-    scored.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .select(col("query_id"), col("corpus_id"), col("score"), col("__rn").as("rank"))
+    cosineTopK(queryCells.join(corpusCell, "__cell"), k)
   }
 
   /** Persist the trained quantizer ([[trainIvf]]'s centroids) as a tiny
@@ -361,13 +358,7 @@ object SimilaritySearch {
       .collect().map(_.getInt(0)).sorted
     val corpusCell = spark.read.parquet(indexPath)
       .where(col("cell").isin(probed.map(Int.box): _*))
-    val scored = queryCells.join(corpusCell, "cell")
-      .where(col("query_id") =!= col("corpus_id"))
-      .withColumn("score", call_function("graft_cosine", col("__qv"), col("__cv")))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("corpus_id"))
-    scored.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .select(col("query_id"), col("corpus_id"), col("score"), col("__rn").as("rank"))
+    cosineTopK(queryCells.join(corpusCell, "cell"), k)
   }
 
   /** Train-then-search composition — the one-shot convenience form (and the

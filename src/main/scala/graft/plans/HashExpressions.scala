@@ -141,171 +141,67 @@ case class ShingleHashesExpr(text: Expression, k: Expression)
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignatureExpr].getName, "graft_minhash_sig"),
-      exprs => MinHashSignatureExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash"),
-      exprs => SimHash64Expr(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashesExpr].getName, "graft_shingle_hashes"),
-      exprs => ShingleHashesExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_text_stats"),
-      new ExpressionInfo(classOf[TextStatsExpr].getName, "graft_text_stats"),
-      exprs => TextStatsExpr(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_lang_id"),
-      new ExpressionInfo(classOf[LangIdExpr].getName, "graft_lang_id"),
-      exprs => LangIdExpr(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarityExpr].getName, "graft_cosine"),
-      exprs => CosineSimilarityExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_nearest_cells"),
-      new ExpressionInfo(classOf[NearestCentroidsExpr].getName, "graft_nearest_cells"),
-      exprs => NearestCentroidsExpr(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_lsh_bucket"),
-      new ExpressionInfo(classOf[HyperplaneBucketExpr].getName, "graft_lsh_bucket"),
-      exprs => HyperplaneBucketExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFingerprintExpr].getName, "graft_winnow"),
-      exprs => WinnowFingerprintExpr(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_nearest_dist"),
-      new ExpressionInfo(classOf[NearestCentroidDistExpr].getName, "graft_nearest_dist"),
-      exprs => NearestCentroidDistExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncodeExpr].getName, "graft_pq_encode"),
-      exprs => PqEncodeExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_pq_lut"),
-      new ExpressionInfo(classOf[PqLutExpr].getName, "graft_pq_lut"),
-      exprs => PqLutExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdcExpr].getName, "graft_pq_adc"),
-      exprs => PqAdcExpr(exprs(0), exprs(1))))
-    // Spark's own bloom-filter pair (used internally by runtime join
-    // filters) exposed as callable functions: the analyzer wraps the
-    // AggregateFunction in an AggregateExpression on resolution.
-    e.injectFunction((FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_bloom_contains"),
-      exprs => BloomFilterMightContain(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalizeExpr].getName, "graft_nfc"),
-      exprs => NfcNormalizeExpr(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_deflate_len"),
-      new ExpressionInfo(classOf[DeflateLenExpr].getName, "graft_deflate_len"),
-      exprs => DeflateLenExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_bpe_tokens"),
-      new ExpressionInfo(classOf[BpeTokensExpr].getName, "graft_bpe_tokens"),
-      exprs => BpeTokensExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_gramian"),
-      new ExpressionInfo(classOf[GramianAggregate].getName, "graft_gramian"),
-      exprs => GramianAggregate(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_bpe_words"),
-      new ExpressionInfo(classOf[BpeWordsExpr].getName, "graft_bpe_words"),
-      exprs => BpeWordsExpr(exprs(0))))
-    e.injectFunction((FunctionIdentifier("graft_pca_project"),
-      new ExpressionInfo(classOf[PcaProjectExpr].getName, "graft_pca_project"),
-      exprs => PcaProjectExpr(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_mg_sketch"),
-      new ExpressionInfo(classOf[MisraGriesAggregate].getName, "graft_mg_sketch"),
-      exprs => MisraGriesAggregate(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKAggregate].getName, "graft_topk"),
-      exprs => TopKAggregate(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_unigram_tokens"),
-      new ExpressionInfo(classOf[UnigramTokensExpr].getName, "graft_unigram_tokens"),
-      exprs => UnigramTokensExpr(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_latest"),
-      new ExpressionInfo(classOf[LatestAggregate].getName, "graft_latest"),
-      exprs => LatestAggregate(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_earliest"),
-      new ExpressionInfo(classOf[LatestAggregate].getName, "graft_earliest"),
-      exprs => LatestAggregate(exprs(0), exprs(1), earliest = true)))
-    e.injectFunction((FunctionIdentifier("graft_topk_rows"),
-      new ExpressionInfo(classOf[TopKRowsAggregate].getName, "graft_topk_rows"),
-      exprs => TopKRowsAggregate(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_kll_agg"),
-      new ExpressionInfo(classOf[KllAggregate].getName, "graft_kll_agg"),
-      exprs => KllAggregate(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_kll_quantile"),
-      new ExpressionInfo(classOf[KllQuantileExpr].getName, "graft_kll_quantile"),
-      exprs => KllQuantileExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_kll_rank"),
-      new ExpressionInfo(classOf[KllRankExpr].getName, "graft_kll_rank"),
-      exprs => KllRankExpr(exprs(0), exprs(1))))
-  }
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    HashExpressions.nativeFunctions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.exprClass.getName, f.name), f.build))
+    }
 }
 
 object HashExpressions {
+  /** A native SQL function: its name, the expression class it builds (for
+    * `ExpressionInfo`) and the builder over its argument expressions. */
+  final case class NativeFunction(name: String, exprClass: Class[_],
+                                  build: Seq[Expression] => Expression)
+
+  private def fn[E <: Expression](name: String)(build: Seq[Expression] => E)(
+      implicit ct: scala.reflect.ClassTag[E]): NativeFunction =
+    NativeFunction(name, ct.runtimeClass, build)
+
+  /** Every `graft_*` function, listed once: both wiring paths
+    * (`GraftExtensions` at session build time, `register` on a live
+    * session) read this table. */
+  val nativeFunctions: Seq[NativeFunction] = Seq(
+    fn("graft_minhash_sig")(a => MinHashSignatureExpr(a(0), a(1))),
+    fn("graft_simhash")(a => SimHash64Expr(a(0))),
+    fn("graft_shingle_hashes")(a => ShingleHashesExpr(a(0), a(1))),
+    fn("graft_text_stats")(a => TextStatsExpr(a(0))),
+    fn("graft_lang_id")(a => LangIdExpr(a(0))),
+    fn("graft_cosine")(a => CosineSimilarityExpr(a(0), a(1))),
+    fn("graft_nearest_cells")(a => NearestCentroidsExpr(a(0), a(1), a(2))),
+    fn("graft_lsh_bucket")(a => HyperplaneBucketExpr(a(0), a(1))),
+    fn("graft_winnow")(a => WinnowFingerprintExpr(a(0), a(1), a(2))),
+    fn("graft_nearest_dist")(a => NearestCentroidDistExpr(a(0), a(1))),
+    fn("graft_pq_encode")(a => PqEncodeExpr(a(0), a(1))),
+    fn("graft_pq_lut")(a => PqLutExpr(a(0), a(1))),
+    fn("graft_pq_adc")(a => PqAdcExpr(a(0), a(1))),
+    // Spark's own bloom-filter pair (used internally by runtime join
+    // filters) exposed as callable functions: the analyzer wraps the
+    // AggregateFunction in an AggregateExpression on resolution.
+    fn("graft_bloom_agg")(a =>
+      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(a(0), a(1))),
+    fn("graft_bloom_contains")(a => BloomFilterMightContain(a(0), a(1))),
+    fn("graft_nfc")(a => NfcNormalizeExpr(a(0))),
+    fn("graft_deflate_len")(a => DeflateLenExpr(a(0), a(1))),
+    fn("graft_bpe_tokens")(a => BpeTokensExpr(a(0), a(1))),
+    fn("graft_gramian")(a => GramianAggregate(a(0), a(1))),
+    fn("graft_bpe_words")(a => BpeWordsExpr(a(0))),
+    fn("graft_pca_project")(a => PcaProjectExpr(a(0), a(1), a(2))),
+    fn("graft_mg_sketch")(a => MisraGriesAggregate(a(0), a(1))),
+    fn("graft_topk")(a => TopKAggregate(a(0), a(1), a(2))),
+    fn("graft_unigram_tokens")(a => UnigramTokensExpr(a(0), a(1), a(2))),
+    fn("graft_latest")(a => LatestAggregate(a(0), a(1))),
+    fn("graft_earliest")(a => LatestAggregate(a(0), a(1), earliest = true)),
+    fn("graft_topk_rows")(a => TopKRowsAggregate(a(0), a(1), a(2))),
+    fn("graft_kll_agg")(a => KllAggregate(a(0), a(1))),
+    fn("graft_kll_quantile")(a => KllQuantileExpr(a(0), a(1))),
+    fn("graft_kll_rank")(a => KllRankExpr(a(0), a(1))))
+
   /** Register the native functions in a session's registry (idempotent);
     * callers then use `functions.call_function("graft_minhash_sig", ...)`. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => MinHashSignatureExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      exprs => SimHash64Expr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      exprs => ShingleHashesExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_text_stats",
-      exprs => TextStatsExpr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lang_id",
-      exprs => LangIdExpr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => CosineSimilarityExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nearest_cells",
-      exprs => NearestCentroidsExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bucket",
-      exprs => HyperplaneBucketExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      exprs => WinnowFingerprintExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nearest_dist",
-      exprs => NearestCentroidDistExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      exprs => PqEncodeExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_lut",
-      exprs => PqLutExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc",
-      exprs => PqAdcExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => NfcNormalizeExpr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_deflate_len",
-      exprs => DeflateLenExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_tokens",
-      exprs => BpeTokensExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_gramian",
-      exprs => GramianAggregate(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_words",
-      exprs => BpeWordsExpr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pca_project",
-      exprs => PcaProjectExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_mg_sketch",
-      exprs => MisraGriesAggregate(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_topk",
-      exprs => TopKAggregate(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_unigram_tokens",
-      exprs => UnigramTokensExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_latest",
-      exprs => LatestAggregate(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_earliest",
-      exprs => LatestAggregate(exprs(0), exprs(1), earliest = true), "built-in")
-    reg.createOrReplaceTempFunction("graft_topk_rows",
-      exprs => TopKRowsAggregate(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_kll_agg",
-      exprs => KllAggregate(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_kll_quantile",
-      exprs => KllQuantileExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_kll_rank",
-      exprs => KllRankExpr(exprs(0), exprs(1)), "built-in")
+    nativeFunctions.foreach(f =>
+      reg.createOrReplaceTempFunction(f.name, f.build, "built-in"))
   }
 }

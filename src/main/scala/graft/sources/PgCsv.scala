@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StructType
 import java.io.{ByteArrayOutputStream, File}
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
+import scala.collection.immutable.ListMap
 
 /** Postgres-COPY-compatible CSV dialect — E7/E8/E10 plus the §1.2 type
   * semantics.
@@ -37,28 +38,21 @@ object PgCsv {
     * back to `""` post-parse preserves the Postgres COPY distinction. */
   private val EmptySentinel = "\u0000\u0001__graft_empty__\u0001\u0000"
 
-  /** Distributed CSV read with the COPY dialect. Schema: caller-supplied, or
-    * all-strings (the reference layer is typeless — Postgres does the type
-    * conversion on COPY FROM; our sinks cast on alignment instead). */
-  def read(spark: SparkSession, path: String, dialect: CsvDialect,
-           schema: Option[StructType] = None,
-           inferSchema: Boolean = false): DataFrame = {
-    val needSentinel = dialect.nullString.isEmpty
-    val effectivePaths =
-      dialect.compression.map(withCodecExtension(path, _)).getOrElse(Seq(path))
-    var r = spark.read
-      .option("sep", dialect.delimiter)
-      .option("quote", dialect.quote)
-      .option("escape", dialect.quote)           // PG doubles quote chars
-      .option("nullValue", dialect.nullString)   // unquoted match → NULL
-      .option("emptyValue", if (needSentinel) EmptySentinel else "")
-      .option("header", dialect.hasHeader.toString)
-      .option("multiLine", "true")               // quoted embedded newlines
-      .option("lineSep", "\n")                   // preserve \r inside fields
-    schema.foreach(s => r = r.schema(s))
-    if (schema.isEmpty && inferSchema) r = r.option("inferSchema", "true")
-    val df = r.csv(effectivePaths: _*)
-    if (!needSentinel) df
+  /** The COPY-dialect reader options [[read]] and [[readStream]] share. */
+  private def readerOptions(d: CsvDialect): ListMap[String, String] = ListMap(
+    "sep" -> d.delimiter,
+    "quote" -> d.quote,
+    "escape" -> d.quote,                 // PG doubles quote chars
+    "nullValue" -> d.nullString,         // unquoted match → NULL
+    "emptyValue" -> (if (d.nullString.isEmpty) EmptySentinel else ""),
+    "header" -> d.hasHeader.toString,
+    "multiLine" -> "true",               // quoted embedded newlines
+    "lineSep" -> "\n")                   // preserve \r inside fields
+
+  /** Rewrite [[EmptySentinel]] back to `""` in every string column (the
+    * sentinel is only in play when the dialect's NULL string is empty). */
+  private def restoreEmpty(df: DataFrame, d: CsvDialect): DataFrame =
+    if (d.nullString.nonEmpty) df
     else {
       val cols = df.schema.fields.map { f =>
         if (f.dataType == org.apache.spark.sql.types.StringType)
@@ -67,6 +61,19 @@ object PgCsv {
       }
       df.select(cols.toIndexedSeq: _*)
     }
+
+  /** Distributed CSV read with the COPY dialect. Schema: caller-supplied, or
+    * all-strings (the reference layer is typeless — Postgres does the type
+    * conversion on COPY FROM; our sinks cast on alignment instead). */
+  def read(spark: SparkSession, path: String, dialect: CsvDialect,
+           schema: Option[StructType] = None,
+           inferSchema: Boolean = false): DataFrame = {
+    val effectivePaths =
+      dialect.compression.map(withCodecExtension(path, _)).getOrElse(Seq(path))
+    var r = spark.read.options(readerOptions(dialect))
+    schema.foreach(s => r = r.schema(s))
+    if (schema.isEmpty && inferSchema) r = r.option("inferSchema", "true")
+    restoreEmpty(r.csv(effectivePaths: _*), dialect)
   }
 
   /** Streaming form of [[read]]: a file-source stream over a directory of
@@ -82,28 +89,11 @@ object PgCsv {
       throw new graft.operators.GraftException(
         "streaming CSV ingest relies on per-file codec extensions (.gz); " +
           "the explicit compression flag applies to batch reads only")
-    val needSentinel = dialect.nullString.isEmpty
-    val df = spark.readStream
-      .option("sep", dialect.delimiter)
-      .option("quote", dialect.quote)
-      .option("escape", dialect.quote)
-      .option("nullValue", dialect.nullString)
-      .option("emptyValue", if (needSentinel) EmptySentinel else "")
-      .option("header", dialect.hasHeader.toString)
-      .option("multiLine", "true")
-      .option("lineSep", "\n")
+    restoreEmpty(spark.readStream
+      .options(readerOptions(dialect))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .schema(schema)
-      .csv(dir)
-    if (!needSentinel) df
-    else {
-      val cols = df.schema.fields.map { f =>
-        if (f.dataType == org.apache.spark.sql.types.StringType)
-          when(col(f.name) === EmptySentinel, lit("")).otherwise(col(f.name)).as(f.name)
-        else col(f.name)
-      }
-      df.select(cols.toIndexedSeq: _*)
-    }
+      .csv(dir), dialect)
   }
 
   /** Hadoop picks the DEcompression codec from the file extension, but the
@@ -205,6 +195,10 @@ object PgCsv {
       // default true on write, unlike read) — Postgres COPY never trims.
       .option("ignoreLeadingWhiteSpace", "false")
       .option("ignoreTrailingWhiteSpace", "false")
+      // Spark writes timestamps to the millisecond by default; Postgres COPY
+      // keeps microseconds. Same separator and zone rendering, six digits.
+      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
+      .option("timestampNTZFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
       .option("header", dialect.hasHeader.toString)
       .option("compression", dialect.compression.getOrElse("none"))
       .mode("overwrite")

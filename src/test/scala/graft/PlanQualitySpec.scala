@@ -328,13 +328,8 @@ class PlanQualitySpec extends AnyFunSuite {
   test("every graft_* function is registered through BOTH wiring paths") {
     // names must exist in the session registry (HashExpressions.register)
     graft.plans.HashExpressions.register(spark)
-    val expected = Seq("graft_minhash_sig", "graft_simhash", "graft_shingle_hashes",
-      "graft_text_stats", "graft_lang_id", "graft_cosine", "graft_nearest_cells",
-      "graft_lsh_bucket", "graft_winnow", "graft_nearest_dist",
-      "graft_pq_encode", "graft_pq_lut", "graft_pq_adc",
-      "graft_bloom_agg", "graft_bloom_contains",
-      "graft_nfc", "graft_deflate_len", "graft_bpe_tokens", "graft_gramian",
-      "graft_bpe_words", "graft_pca_project", "graft_mg_sketch")
+    val expected = graft.plans.HashExpressions.nativeFunctions.map(_.name)
+    assert(expected.distinct.size == expected.size, s"duplicate names: $expected")
     val reg = spark.sessionState.functionRegistry
     val missing = expected.filterNot(n =>
       reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))

@@ -134,6 +134,17 @@ class TransferOpsSpec extends AnyFunSuite {
     assert(row.getInt(0) == 3 && row.getString(1) == "tres")
   }
 
+  test("QueryToCsv → CsvToTable round trip keeps timestamp microseconds (COPY precision)") {
+    val out = tmp("ts.csv")
+    val sql = "SELECT 1 AS id, TIMESTAMP_NTZ'2024-03-05 06:07:08.123456' AS ntz, " +
+      "TIMESTAMP'2024-03-05 06:07:08.654321' AS ts"
+    assert(QueryToCsv.run(spark, sql, out).rowCount == 1)
+    spark.sql("DROP TABLE IF EXISTS xfer_ts")
+    spark.sql("CREATE TABLE xfer_ts (id INT, ntz TIMESTAMP_NTZ, ts TIMESTAMP) USING parquet")
+    assert(CsvToTable.run(spark, "xfer_ts", out) == 1)
+    assert(spark.table("xfer_ts").collect().toSeq == spark.sql(sql).collect().toSeq)
+  }
+
   test("CsvToTable: field-count mismatch raises, never NULL-fills (COPY semantics)") {
     spark.sql("DROP TABLE IF EXISTS xfer_mismatch")
     spark.sql("CREATE TABLE xfer_mismatch (id INT, name STRING, extra STRING) USING parquet")

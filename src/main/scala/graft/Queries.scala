@@ -49,9 +49,10 @@ object Queries {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
-  /** For spark.sql-based entries: register views then run the shared text. */
+  /** For spark.sql-based entries: register the views the text names, then
+    * run it. */
   private def viaSql(sql: String)(s: SparkSession, d: String): DataFrame = {
-    Tables.registerAll(s, d)
+    Tables.register(s, d, Tables.referencedIn(sql))
     SqlRunner.run(s, sql)
   }
 

@@ -9,12 +9,11 @@ object Verify {
     // (a fast loop for one new entry); the oracle json always covers all
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // the same engine confs as Bench and perfbench (GraftSession), sized
+    // by SPARK_GRAFT_CPUS
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.configure(
+      SparkSession.builder().master(s"local[$cpus]"), cpus, "verify")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{BufferedOutputStream, FileOutputStream}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -19,7 +19,10 @@ import org.apache.spark.sql.functions._
   * Invariants held HERE so the formats can't drift: `.crc` sidecars are
   * excluded, parts concatenate in lexicographic name order (Spark part
   * numbering is zero-padded, so this is task order), and the temp dir is
-  * removed even on failure. */
+  * removed even on failure. The concat goes to a file inside the temp dir
+  * (same filesystem as the target) and is published with one atomic
+  * rename, so the target holds either its previous bytes or the whole new
+  * export — never a truncated one. */
 private[sources] object SingleFile {
 
   def write(df: DataFrame, targetPath: String,
@@ -34,11 +37,14 @@ private[sources] object SingleFile {
       val parts = tmpDir.toFile.listFiles()
         .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
         .sortBy(_.getName)
-      val out = new BufferedOutputStream(new FileOutputStream(targetPath))
+      val staged = tmpDir.resolve(".graft-single-out")
+      val out = new BufferedOutputStream(new FileOutputStream(staged.toFile))
       try {
         header.foreach(out.write)
         parts.foreach(p => Files.copy(p.toPath, out))
       } finally out.close()
+      Files.move(staged, Paths.get(targetPath),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       obs.get("rows").asInstanceOf[Long]
     } finally {
       tmpDir.toFile.listFiles().foreach(_.delete())

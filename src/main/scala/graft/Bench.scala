@@ -39,7 +39,6 @@ object Bench {
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt, "graft-bench")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.ensureConfs(spark)
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger

@@ -30,12 +30,4 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS); Spark's reader has no nanos
       // type — read as Long then convert (see Tables.table).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  /** Ensure confs that queries depend on are set even when the session was
-    * built elsewhere (e.g. the driver's Verify/Bench harness). All of these
-    * are runtime-settable SQL confs. */
-  def ensureConfs(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-  }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.HashExpressions.native
 import graft.sources.Tables
 import graft.sql.SqlRunner
 
@@ -1361,10 +1362,9 @@ FROM ranked WHERE rn <= 5 ORDER BY query_id, rank"""))
     (s, d) => {
       // native single-pass stats (equivalence to the Column forms is pinned
       // by NativeTextSpec); qualityScore composes from the struct fields
-      graft.plans.HashExpressions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"),
-          call_function("graft_text_stats", col("text")).as("st"))
+          native("graft_text_stats", col("text")).as("st"))
         .select(col("doc_id"), col("st.n_tokens").as("n_tokens"),
           col("st.n_bpeish").as("n_bpeish"),
           round2(col("st.punct_ratio")).as("punct_ratio"),
@@ -1401,9 +1401,8 @@ FROM st ORDER BY doc_id"""))
 
   private val x4c = DeclaredQuery("x04c_lang_id",
     (s, d) => {
-      graft.plans.HashExpressions.register(s)
       t(s, d, "documents")
-        .groupBy(call_function("graft_lang_id", col("text")).as("detected"))
+        .groupBy(native("graft_lang_id", col("text")).as("detected"))
         .agg(count(lit(1)).as("n"))
         .orderBy("detected")
     },
@@ -1849,10 +1848,9 @@ WHERE o.o_totalprice > 400000 GROUP BY o_orderpriority ORDER BY o_orderpriority"
     // quality (the value x04b already hash-matches) so the ≥ threshold cut
     // is engine-stable by construction.
     (s, d) => {
-      graft.plans.HashExpressions.register(s)
       val scored = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("text"),
-          call_function("graft_text_stats", col("text")).as("st"))
+          native("graft_text_stats", col("text")).as("st"))
         .select(col("doc_id"), col("lang"), col("text"),
           col("st.n_tokens").as("n_tokens"),
           round2(graft.functions.TextAnalysis.qualityFromStats(col("st"))).as("q"))
@@ -3147,10 +3145,9 @@ GROUP BY doc_id ORDER BY doc_id"""))
     // (the synthetic corpus is ASCII-already-NFC — identity is part of the
     // contract; non-ASCII forms are pinned in NativeTextSpec).
     (s, d) => {
-      graft.plans.HashExpressions.register(s)
       t(s, d, "documents").select(col("doc_id"),
-          call_function("graft_nfc", col("text")).as("text_nfc"),
-          (col("text") === call_function("graft_nfc", col("text"))).as("already_nfc"))
+          native("graft_nfc", col("text")).as("text_nfc"),
+          (col("text") === native("graft_nfc", col("text"))).as("already_nfc"))
         .orderBy("doc_id")
     },
     Some("""SELECT doc_id, nfc_normalize(text) AS text_nfc,
@@ -3163,10 +3160,9 @@ FROM documents ORDER BY doc_id"""))
     // natural prose. No SQL oracle (DuckDB exposes no per-row compressor) —
     // rows-only; NativeTextSpec pins byte-exactness against java.util.zip.
     (s, d) => {
-      graft.plans.HashExpressions.register(s)
       t(s, d, "documents").select(col("doc_id"),
-          call_function("graft_deflate_len", col("text"), lit(6)).as("deflate_len"),
-          round2(call_function("graft_deflate_len", col("text"), lit(6)).cast("double") /
+          native("graft_deflate_len", col("text"), lit(6)).as("deflate_len"),
+          round2(native("graft_deflate_len", col("text"), lit(6)).cast("double") /
             nullif(octet_length(col("text")), lit(0)).cast("double")).as("ratio"))
         .orderBy("doc_id")
     },

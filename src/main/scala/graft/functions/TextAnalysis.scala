@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 
 /** Text-analysis primitives for training-data pipelines (SURVEY.md §2c X4):
   * tokenization, token counting, quality scoring, language ID, document
@@ -29,16 +30,16 @@ object TextAnalysis {
 
   /** Unicode NFC canonical composition (native `graft_nfc`): run before
     * hashing/shingling so decomposed and precomposed forms dedup as one
-    * document. Caller must have registered the graft functions. */
+    * document. */
   def nfcNormalize(text: Column): Column =
-    call_function("graft_nfc", text)
+    native("graft_nfc", text)
 
   /** DEFLATE compression ratio (compressed bytes / raw bytes, native
     * `graft_deflate_len`): the Gopher/RefinedWeb quality signal —
     * boilerplate and repetition compress far harder than natural prose.
-    * NULL for empty text. Caller must have registered the graft functions. */
+    * NULL for empty text. */
   def compressionRatio(text: Column, level: Int = 6): Column =
-    call_function("graft_deflate_len", text, lit(level)).cast("double") /
+    native("graft_deflate_len", text, lit(level)).cast("double") /
       nullif(octet_length(text), lit(0)).cast("double")
 
   /** Ratio of non-alphanumeric-non-space chars to total chars. */
@@ -133,8 +134,7 @@ object TextAnalysis {
     * k-grams, window-min selection — any shared substring of length
     * ≥ k + w − 1 yields a common fingerprint, so two documents sharing a
     * passage intersect here even when their full-document hashes differ.
-    * Native expression; callers must have registered
-    * [[graft.plans.HashExpressions]]. */
+    * Native expression. */
   def winnowFingerprints(text: Column, k: Int = 12, w: Int = 8): Column =
-    call_function("graft_winnow", text, lit(k), lit(w))
+    native("graft_winnow", text, lit(k), lit(w))
 }

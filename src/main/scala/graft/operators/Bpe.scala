@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 import graft.functions.TextAnalysis
 
 /** Byte-pair-encoding tokenizer [Sennrich et al., ACL 2016] — real subword
@@ -37,9 +38,8 @@ object Bpe {
   def train(df: DataFrame, textCol: String, numMerges: Int,
             maxWordTypes: Int = 50000): BpeModel = {
     require(numMerges > 0 && maxWordTypes > 0, "numMerges and maxWordTypes must be positive")
-    graft.plans.HashExpressions.register(df.sparkSession)
     val wordFreqs: Array[(String, Long)] = df
-      .select(explode(call_function("graft_bpe_words", col(textCol))).as("w"))
+      .select(explode(native("graft_bpe_words", col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w")).limit(maxWordTypes)
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -191,17 +191,15 @@ object Bpe {
     * word — the standard BPE apply. Map-only. */
   def tokens(df: DataFrame, textCol: String, model: BpeModel,
              outCol: String = "bpe_tokens"): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.withColumn(outCol,
-      call_function("graft_bpe_tokens", col(textCol), mergesLit(model)))
+      native("graft_bpe_tokens", col(textCol), mergesLit(model)))
   }
 
   /** Real-model token count — the budgeting input for [[Packing]]. */
   def tokenCount(df: DataFrame, textCol: String, model: BpeModel,
                  outCol: String = "n_bpe_tokens"): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.withColumn(outCol,
-      size(call_function("graft_bpe_tokens", col(textCol), mergesLit(model))))
+      size(native("graft_bpe_tokens", col(textCol), mergesLit(model))))
   }
 
   /** Persist / load the merge list (rank-ordered) — the tokenizer artifact. */

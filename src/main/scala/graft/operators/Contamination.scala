@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 
 /** Benchmark decontamination: find (and remove) training documents that
   * share k-token n-grams with an evaluation/benchmark set — the standard
@@ -48,10 +49,9 @@ object Contamination {
 
   private def postings(df: DataFrame, idCol: String, textCol: String,
                        k: Int): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.select(col(idCol),
         explode(array_distinct(
-          call_function("graft_shingle_hashes", col(textCol), lit(k))))
+          native("graft_shingle_hashes", col(textCol), lit(k))))
           .as("__h"))
   }
 
@@ -206,10 +206,9 @@ object Contamination {
                               corpusVec: String, bench: DataFrame,
                               benchVec: String,
                               minCosine: Double): DataFrame = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     corpus.select(col(corpusId), col(corpusVec).as("__cv"))
       .crossJoin(broadcast(bench.select(col(benchVec).as("__bv"))))
-      .where(call_function("graft_cosine", col("__cv"), col("__bv")) >= minCosine)
+      .where(native("graft_cosine", col("__cv"), col("__bv")) >= minCosine)
       .select(col(corpusId)).distinct()
   }
 
@@ -251,10 +250,9 @@ object Contamination {
   def noveltyFractions(corpus: DataFrame, idCol: String, textCol: String,
                        reference: DataFrame, refTextCol: String,
                        k: Int = 8): DataFrame = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val refSet = reference
       .select(explode(array_distinct(
-        call_function("graft_shingle_hashes", col(refTextCol), lit(k))))
+        native("graft_shingle_hashes", col(refTextCol), lit(k))))
         .as("__h"))
       .distinct()
       .withColumn("__seen", lit(1))

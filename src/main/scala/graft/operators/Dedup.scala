@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.HashExpressions.native
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2c X1/X2).
   *
@@ -24,10 +25,9 @@ object Dedup {
     * spelling's per-partition sorts. Same keep-smallest-tieBreaker rows
     * (pinned by the x01 gates' DuckDB window oracle). */
   def exactKeepFirst(df: DataFrame, keyCols: Seq[String], tieBreaker: String): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val row = struct(df.columns.map(col): _*)
     df.groupBy(keyCols.map(col): _*)
-      .agg(call_function("graft_earliest", struct(col(tieBreaker)), row)
+      .agg(native("graft_earliest", struct(col(tieBreaker)), row)
         .as("__graft_first"))
       .select(col("__graft_first.*"))
   }
@@ -83,13 +83,12 @@ object Dedup {
                          key: DataFrame => org.apache.spark.sql.Column,
                          expectedDistinct: Long): DataFrame = {
     require(expectedDistinct > 0, "expectedDistinct must be positive")
-    graft.plans.HashExpressions.register(newDf.sparkSession)
     val bloom: Array[Byte] = seen
-      .select(call_function("graft_bloom_agg",
+      .select(native("graft_bloom_agg",
         xxhash64(key(seen)), lit(expectedDistinct)).as("bf"))
       .head().getAs[Array[Byte]](0)
     if (bloom == null) return newDf // empty seen corpus: nothing to drop
-    val maybe = call_function("graft_bloom_contains", lit(bloom), xxhash64(key(newDf)))
+    val maybe = native("graft_bloom_contains", lit(bloom), xxhash64(key(newDf)))
     newDf.where(!maybe).unionAll(dedupeAgainst(newDf.where(maybe), seen, key))
   }
 
@@ -97,14 +96,8 @@ object Dedup {
     * (n-gram Jaccard ≥ `minJaccard`) in the kept corpus — composes
     * [[NearDup.nearDuplicatesAgainst]] with one anti-join on the new ids.
     * Within-batch duplicates are NOT collapsed here (compose with
-    * [[keepClusterRepresentatives]] over the batch for that).
-    *
-    * Streaming note: usable per micro-batch inside `foreachBatch`, but a
-    * micro-batch executes in a session CLONE whose function registry is
-    * snapshotted at query start — the graft native functions must already
-    * be registered on the driving session when the query STARTS (building
-    * the session with `GraftExtensions` does this; the lazy per-operator
-    * registration alone is too late for the clone). */
+    * [[keepClusterRepresentatives]] over the batch for that). Usable per
+    * micro-batch inside `foreachBatch`. */
   def dedupeAgainstFuzzy(newDf: DataFrame, seen: DataFrame,
                          idCol: String, textCol: String,
                          minJaccard: Double = 0.8): DataFrame = {
@@ -141,11 +134,10 @@ object Dedup {
   def keepLatest(df: DataFrame, keyCols: Seq[String], versionCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(versionCols.nonEmpty, "versionCols must be non-empty")
-    graft.plans.HashExpressions.register(df.sparkSession)
     val row = struct(df.columns.map(col): _*)
     val version = struct(versionCols.map(col): _*)
     df.groupBy(keyCols.map(col): _*)
-      .agg(call_function("graft_latest", version, row).as("__graft_latest"))
+      .agg(native("graft_latest", version, row).as("__graft_latest"))
       .select(col("__graft_latest.*"))
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.plans.HashExpressions.native
 
 import graft.functions.TextAnalysis
 
@@ -35,8 +36,7 @@ object HeavyHitters {
     * aggregate's scaladoc for both guarantees). */
   def sketch(df: DataFrame, tokenCol: String, capacity: Int): DataFrame = {
     require(capacity >= 1, "capacity must be >= 1")
-    graft.plans.HashExpressions.register(df.sparkSession)
-    df.agg(call_function("graft_mg_sketch", col(tokenCol), lit(capacity)).as("s"))
+    df.agg(native("graft_mg_sketch", col(tokenCol), lit(capacity)).as("s"))
       .select(col("s.n").as("n_tokens"), explode(col("s.items")).as("it"))
       .select(col("it.term").as("term"), col("it.est").as("est"),
         col("n_tokens"))

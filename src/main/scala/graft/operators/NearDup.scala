@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 import graft.functions.TextAnalysis
 
 /** Near-duplicate detection (SURVEY.md §2c X2): MinHash+LSH, SimHash,
@@ -54,7 +55,6 @@ object NearDup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 128, bands: Int = 32, k: Int = 3,
                         minEstJaccard: Double = 0.5): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val hs = shingleHashFrame(df, idCol, textCol, k)
     try minhashCandidatesFromHashes(hs, numHashes, bands, minEstJaccard)
     finally hs.unpersist(false)
@@ -66,13 +66,13 @@ object NearDup {
   private def shingleHashFrame(df: DataFrame, idCol: String, textCol: String,
                                k: Int): DataFrame =
     df.select(col(idCol).as("__id"),
-      call_function("graft_shingle_hashes", col(textCol), lit(k)).as("__hs"))
+      native("graft_shingle_hashes", col(textCol), lit(k)).as("__hs"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Persisted (id, signature) frame — see the cache rationale inline below. */
   private def sigFrame(hs: DataFrame, numHashes: Int): DataFrame =
     hs.select(col("__id"),
-      call_function("graft_minhash_sig", col("__hs"), lit(numHashes)).as("__sig"))
+      native("graft_minhash_sig", col("__hs"), lit(numHashes)).as("__sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** (band, bandHash, id) keys: unrolled codegen'd xxhash64 per band. */
@@ -95,7 +95,7 @@ object NearDup {
     // and per join side. At cluster scale this is |corpus| × numHashes × 8B,
     // spillable — the standard production-LSH shape.
     val sig = hs.select(col("__id"),
-      call_function("graft_minhash_sig", col("__hs"), lit(numHashes)).as("__sig"))
+      native("graft_minhash_sig", col("__hs"), lit(numHashes)).as("__sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // The candidate join shuffles only (band, bandHash, id) — 20 bytes/row,
     // never the 1KB signature (and never the text). Signatures re-attach to
@@ -149,7 +149,6 @@ object NearDup {
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
                      minJaccard: Double = 0.8, numHashes: Int = 128,
                      bands: Int = 32, k: Int = 3): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val hs = shingleHashFrame(df, idCol, textCol, k)
     try {
       val cands = minhashCandidatesFromHashes(hs, numHashes, bands,
@@ -183,7 +182,6 @@ object NearDup {
                             minJaccard: Double = 0.8, numHashes: Int = 128,
                             bands: Int = 32, k: Int = 3): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.plans.HashExpressions.register(newDf.sparkSession)
     val hsNew = shingleHashFrame(newDf, idCol, textCol, k)
     val hsSeen = shingleHashFrame(seen, idCol, textCol, k)
     val sigNew = sigFrame(hsNew, numHashes)
@@ -245,13 +243,12 @@ object NearDup {
     * makes (IVF centroids, PQ codes). */
   def buildNearDupIndex(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 128, k: Int = 3): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     // staged projection: shingle once, derive both columns from the alias
     // (CollapseProject leaves the expensive multiply-referenced alias alone)
     df.select(col(idCol).as("id"),
-        call_function("graft_shingle_hashes", col(textCol), lit(k)).as("__hs"))
+        native("graft_shingle_hashes", col(textCol), lit(k)).as("__hs"))
       .select(col("id"),
-        call_function("graft_minhash_sig", col("__hs"), lit(numHashes)).as("minhash_sig"),
+        native("graft_minhash_sig", col("__hs"), lit(numHashes)).as("minhash_sig"),
         array_distinct(col("__hs")).as("shingle_hashes"),
         lit(numHashes).as("num_hashes"), lit(k).as("shingle_k"))
   }
@@ -266,7 +263,6 @@ object NearDup {
                                  idCol: String, textCol: String,
                                  minJaccard: Double = 0.8,
                                  bands: Int = 32): DataFrame = {
-    graft.plans.HashExpressions.register(newDf.sparkSession)
     // Uniformity check in ONE partial-agg pass (count_distinct over the
     // param struct + first values): a union of artifacts built with
     // different parameters must fail loud, not silently sign the query
@@ -329,9 +325,8 @@ object NearDup {
   def jaccardPairsExact(df: DataFrame, idCol: String, textCol: String,
                         minJaccard: Double, k: Int = 3,
                         dfCap: Option[Long] = None): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val hs = df.select(col(idCol).as("__id"),
-      array_distinct(call_function("graft_shingle_hashes", col(textCol), lit(k)))
+      array_distinct(native("graft_shingle_hashes", col(textCol), lit(k)))
         .as("__sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = hs.select(col("__id"), size(col("__sh")).as("__n"))
@@ -390,9 +385,8 @@ object NearDup {
       k: Int = 3, dfCap: Option[Long] = None): (DataFrame, DataFrame) = {
     require(minContainment > 0.0 && minContainment <= 1.0,
       s"minContainment must be in (0, 1], got $minContainment")
-    graft.plans.HashExpressions.register(df.sparkSession)
     val hs = df.select(col(idCol).as("__id"),
-      array_distinct(call_function("graft_shingle_hashes", col(textCol), lit(k)))
+      array_distinct(native("graft_shingle_hashes", col(textCol), lit(k)))
         .as("__sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = hs.select(col("__id"), size(col("__sh")).as("__n"))
@@ -434,7 +428,6 @@ object NearDup {
   def winnowOverlapPairs(df: DataFrame, idCol: String, textCol: String,
                          k: Int = 16, w: Int = 32, minShared: Int = 3,
                          dfCap: Long = 10): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val fp = df.select(col(idCol).as("__id"),
         explode(TextAnalysis.winnowFingerprints(col(textCol), k, w)).as("__fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -502,9 +495,8 @@ object NearDup {
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxBits: Int = 3): DataFrame = {
     // native expression (one call/row) instead of the interpreted HOF fold
-    graft.plans.HashExpressions.register(df.sparkSession)
     hammingPairs64(df.select(col(idCol),
-        call_function("graft_simhash", TextAnalysis.tokens(col(textCol)))
+        native("graft_simhash", TextAnalysis.tokens(col(textCol)))
           .as("__simhash64")),
       idCol, "__simhash64", maxBits)
   }
@@ -566,11 +558,10 @@ object NearDup {
     * [[SimilaritySearch]] are the subquadratic alternatives. */
   def cosinePairsExact(df: DataFrame, idCol: String, vecCol: String,
                        minCosine: Double): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val a = df.select(col(idCol).as("id_1"), col(vecCol).as("__v1"))
     val b = df.select(col(idCol).as("id_2"), col(vecCol).as("__v2"))
     a.crossJoin(b).where(col("id_1") < col("id_2"))
-      .withColumn("cosine", call_function("graft_cosine", col("__v1"), col("__v2")))
+      .withColumn("cosine", native("graft_cosine", col("__v1"), col("__v2")))
       .where(col("cosine") >= minCosine)
       .select("id_1", "id_2", "cosine")
   }
@@ -592,10 +583,9 @@ object NearDup {
                 centroids: Seq[Array[Double]], minCosine: Double,
                 probes: Int = 1): DataFrame = {
     require(probes >= 1, "probes must be >= 1")
-    graft.plans.HashExpressions.register(df.sparkSession)
     val cents = array(centroids.map(c => array(c.map(lit): _*)): _*)
     val cell = df.select(col(idCol).as("__id"), col(vecCol).as("__v"),
-      explode(call_function("graft_nearest_cells", col(vecCol), cents,
+      explode(native("graft_nearest_cells", col(vecCol), cents,
         lit(probes))).as("__cell"))
     val a = cell.select(col("__cell"), col("__id").as("id_1"), col("__v").as("__v1"))
     val b = cell.select(col("__cell"), col("__id").as("id_2"), col("__v").as("__v2"))
@@ -607,7 +597,7 @@ object NearDup {
       // raw vectors through a candidate-sized exchange (measured ~3× the
       // whole stage's cost at sf0.1). Same trick as hammingPairs' cheap
       // bit_count before ITS dedup shuffle.
-      .withColumn("cosine", call_function("graft_cosine", col("__v1"), col("__v2")))
+      .withColumn("cosine", native("graft_cosine", col("__v1"), col("__v2")))
       .where(col("cosine") >= minCosine)
       .select("id_1", "id_2", "cosine")
     // probes > 1 pairs the same ids once per shared cell (probes = 1 cannot

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 
 /** Distributed PCA for embedding columns — the dimensionality-reduction rung
   * of the vector pipeline (SURVEY.md §2c X3/X5): project D-dim embeddings to
@@ -55,9 +56,8 @@ object Pca {
     * path. */
   private[graft] def momentsByGramian(df: DataFrame, vecCol: String, dim: Int)
       : (Long, Array[Double], Array[Array[Double]]) = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val r = df.where(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(call_function("graft_gramian", col(vecCol), lit(dim)).as("g"))
+      .select(native("graft_gramian", col(vecCol), lit(dim)).as("g"))
       .head().getStruct(0)
     val n = r.getLong(0)
     val nn = n.toDouble
@@ -122,11 +122,10 @@ object Pca {
     * [[ProductQuantization.trainPq]]'s filter). */
   def project(df: DataFrame, vecCol: String, model: PcaModel,
               outCol: String = "pca"): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val muLit = array(model.mean.map(lit): _*)
     val wLit = array(model.components.map(c => array(c.map(lit): _*)): _*)
     df.withColumn(outCol,
-      call_function("graft_pca_project", col(vecCol), muLit, wLit))
+      native("graft_pca_project", col(vecCol), muLit, wLit))
   }
 
   /** The builtin `transform`/`aggregate` projection — retained as the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.HashExpressions.native
 
 /** Product quantization [Jégou et al., TPAMI 2011] — the memory-compression
   * rung of the ANN ladder (SURVEY.md §2c X3), below brute force and beside
@@ -52,7 +53,6 @@ object ProductQuantization {
       : Seq[Seq[Array[Double]]] = {
     require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
     require(ksub > 0 && iters >= 0, "ksub must be positive, iters non-negative")
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val dsub = dim / m
     // Null AND wrong-length vectors are ignored throughout (same guard as
     // Pca.fit): a ragged vector in the init sample would seed short/empty
@@ -86,9 +86,9 @@ object ProductQuantization {
       val assigned = subRows.withColumn("__cell",
         (1 until m).foldLeft(
           when(col("__m") === 0,
-            element_at(call_function("graft_nearest_cells", col("__sv"), bookLits(0), lit(1)), 1))) {
+            element_at(native("graft_nearest_cells", col("__sv"), bookLits(0), lit(1)), 1))) {
           (acc, mi) => acc.when(col("__m") === mi,
-            element_at(call_function("graft_nearest_cells", col("__sv"), bookLits(mi), lit(1)), 1))
+            element_at(native("graft_nearest_cells", col("__sv"), bookLits(mi), lit(1)), 1))
         })
       val means = assigned.where(col("__cell").isNotNull)
         .select(col("__m"), col("__cell"), posexplode(col("__sv")).as(Seq("__i", "__x")))
@@ -105,9 +105,8 @@ object ProductQuantization {
     * the scan; this is the index-build pass). */
   def encode(df: DataFrame, vecCol: String,
              cb: Seq[Seq[Array[Double]]], codeCol: String = "pq_code"): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.withColumn(codeCol,
-      call_function("graft_pq_encode", col(vecCol), codebooksLit(cb)))
+      native("graft_pq_encode", col(vecCol), codebooksLit(cb)))
   }
 
   /** Mean squared reconstruction error — the PQ training objective:
@@ -116,12 +115,11 @@ object ProductQuantization {
     * pins it non-increasing over [[trainPq]] iterations. */
   def reconstructionError(corpus: DataFrame, vecCol: String,
                           cb: Seq[Seq[Array[Double]]]): Double = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val cbl = codebooksLit(cb)
     corpus.where(col(vecCol).isNotNull)
-      .select(avg(call_function("graft_pq_adc",
-        call_function("graft_pq_encode", col(vecCol), cbl),
-        call_function("graft_pq_lut", col(vecCol), cbl))).as("e"))
+      .select(avg(native("graft_pq_adc",
+        native("graft_pq_encode", col(vecCol), cbl),
+        native("graft_pq_lut", col(vecCol), cbl))).as("e"))
       .head().getDouble(0)
   }
 
@@ -133,7 +131,7 @@ object ProductQuantization {
                       k: Int, excludeSelf: Boolean): DataFrame = {
     val scored = (if (excludeSelf) paired.where(col("query_id") =!= col("corpus_id"))
                   else paired)
-      .withColumn("adc_dist", call_function("graft_pq_adc", col(codeCol), col("__lut")))
+      .withColumn("adc_dist", native("graft_pq_adc", col(codeCol), col("__lut")))
       .where(col("adc_dist").isNotNull)
     val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("corpus_id"))
     scored.withColumn("__rn", row_number().over(w))
@@ -155,9 +153,8 @@ object ProductQuantization {
                 queryIdCol: String, vecCol: String,
                 cb: Seq[Seq[Array[Double]]], k: Int,
                 excludeSelf: Boolean = false): DataFrame = {
-    graft.plans.HashExpressions.register(corpusCodes.sparkSession)
     val q = queries.select(col(queryIdCol).as("query_id"),
-      call_function("graft_pq_lut", col(vecCol), codebooksLit(cb)).as("__lut"))
+      native("graft_pq_lut", col(vecCol), codebooksLit(cb)).as("__lut"))
     val c = corpusCodes.select(col(idCol).as("corpus_id"), col(codeCol).as("__code"))
     val paired = c.crossJoin(broadcast(q))
     adcTopK(paired, "__code", k, excludeSelf)
@@ -177,10 +174,9 @@ object ProductQuantization {
     * codebooks and codes quantize the same distribution. */
   def residualsOf(corpus: DataFrame, idCol: String, vecCol: String,
                   cents: Seq[Array[Double]]): DataFrame = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val centLit = array(cents.map(c => array(c.map(lit): _*)): _*)
     val cell = element_at(
-      call_function("graft_nearest_cells", col(vecCol), centLit, lit(1)), 1)
+      native("graft_nearest_cells", col(vecCol), centLit, lit(1)), 1)
     corpus.select(col(idCol), cell.as("cell"),
       residualCol(col(vecCol), cell, centLit).as("residual"))
   }
@@ -195,13 +191,12 @@ object ProductQuantization {
                   cents: Seq[Array[Double]], cb: Seq[Seq[Array[Double]]],
                   cellCol: String = "cell", codeCol: String = "pq_code",
                   residual: Boolean = false): DataFrame = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val centLit = array(cents.map(c => array(c.map(lit): _*)): _*)
     val cell = element_at(
-      call_function("graft_nearest_cells", col(vecCol), centLit, lit(1)), 1)
+      native("graft_nearest_cells", col(vecCol), centLit, lit(1)), 1)
     val encoded = if (residual) residualCol(col(vecCol), cell, centLit) else col(vecCol)
     corpus.select(col(idCol), cell.as(cellCol),
-      call_function("graft_pq_encode", encoded, codebooksLit(cb)).as(codeCol))
+      native("graft_pq_encode", encoded, codebooksLit(cb)).as(codeCol))
   }
 
   /** IVF-PQ search [Jégou et al. 2011, the IVFADC system]: each query probes
@@ -221,18 +216,17 @@ object ProductQuantization {
                    cents: Seq[Array[Double]], cb: Seq[Seq[Array[Double]]],
                    nprobe: Int, k: Int, excludeSelf: Boolean = false,
                    residual: Boolean = false): DataFrame = {
-    graft.plans.HashExpressions.register(corpusIndexed.sparkSession)
     val centLit = array(cents.map(c => array(c.map(lit): _*)): _*)
     // residual form: one LUT per (query, probed cell) — the table is built
     // from (qv − that cell's centroid), matching the residual the cell's
     // codes quantize. nprobe small tables per query, still query-side only.
     val q0 = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"),
-      explode(call_function("graft_nearest_cells", col(vecCol), centLit, lit(nprobe)))
+      explode(native("graft_nearest_cells", col(vecCol), centLit, lit(nprobe)))
         .as("__qcell"))
     val lutOf = if (residual) residualCol(col("__qv"), col("__qcell"), centLit)
                 else col("__qv")
     val q = q0.select(col("query_id"), col("__qcell"),
-      call_function("graft_pq_lut", lutOf, codebooksLit(cb)).as("__lut"))
+      native("graft_pq_lut", lutOf, codebooksLit(cb)).as("__lut"))
     val c = corpusIndexed.select(col(idCol).as("corpus_id"),
       col(cellCol).as("__qcell"), col(codeCol).as("__code"))
     val paired = c.join(broadcast(q), Seq("__qcell"))
@@ -364,7 +358,6 @@ object ProductQuantization {
                          vecCol: String, queryIdCol: String,
                          k: Int, nprobe: Int = 2,
                          excludeSelf: Boolean = false): DataFrame = {
-    graft.plans.HashExpressions.register(spark)
     val cents = SimilaritySearch.loadCentroids(spark, s"$indexPath/_centroids")
     val cb = loadPqModel(spark, s"$indexPath/_pqmodel")
     // encoding form travels WITH the index. ONLY absence of the marker may
@@ -378,12 +371,12 @@ object ProductQuantization {
       else spark.read.parquet(s"$indexPath/_encoding").head().getBoolean(0)
     val centLit = array(cents.map(c => array(c.map(lit): _*)): _*)
     val q0 = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"),
-      explode(call_function("graft_nearest_cells", col(vecCol), centLit, lit(nprobe)))
+      explode(native("graft_nearest_cells", col(vecCol), centLit, lit(nprobe)))
         .as("cell"))
     val lutOf = if (residual) residualCol(col("__qv"), col("cell"), centLit)
                 else col("__qv")
     val q = q0.select(col("query_id"), col("cell"),
-      call_function("graft_pq_lut", lutOf, codebooksLit(cb)).as("__lut"))
+      native("graft_pq_lut", lutOf, codebooksLit(cb)).as("__lut"))
     val probed = q.select("cell").distinct().collect().map(_.getInt(0)).sorted
     val corpusCell = spark.read.parquet(indexPath)
       .where(col("cell").isin(probed.map(Int.box): _*))

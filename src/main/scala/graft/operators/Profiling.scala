@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 
 /** Table profiling — the `ANALYZE`-style per-column summary a pipeline runs
   * before trusting a new data drop: row count, null count, exact distinct
@@ -150,14 +151,13 @@ object Profiling {
     * single entry of the Gramian's upper triangle. */
   private def pairwiseCorrelations(df: DataFrame, cols: Seq[String])
       : Seq[(String, String, Option[Double])] = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val d = cols.size
     val vs = cols.map(c => coalesce(col(c).cast("double"), lit(0.0)))
     val ms = cols.map(c => when(col(c).isNotNull, 1.0).otherwise(0.0))
     val qs = vs.map(v => v * v)
     val dd = 3 * d
     val r = df
-      .select(call_function("graft_gramian", array(vs ++ ms ++ qs: _*), lit(dd)).as("g"))
+      .select(native("graft_gramian", array(vs ++ ms ++ qs: _*), lit(dd)).as("g"))
       .head().getStruct(0)
     val tri = r.getSeq[Double](2)
     // upper-triangle index: requires a <= b (all uses below order d-block
@@ -393,12 +393,11 @@ object Profiling {
     * tabular sibling of [[Pca.momentsByGramian]]. */
   private def numericMoments(df: DataFrame, cols: Seq[String])
       : (Long, Array[Double], Array[Array[Double]]) = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val d = cols.size
     val packed = array(cols.map(c => col(c).cast("double")): _*)
     val r = df
       .where(cols.map(c => col(c).isNotNull).reduce(_ && _))
-      .select(call_function("graft_gramian", packed, lit(d)).as("g"))
+      .select(native("graft_gramian", packed, lit(d)).as("g"))
       .head().getStruct(0)
     val n = r.getLong(0)
     val nn = n.toDouble

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 
 /** Corpus SELECTION — choosing WHICH cleaned documents a training run gets,
   * after dedup/filter decide which are usable. Two standard curation
@@ -420,9 +421,8 @@ object Selection {
     require(scoreType.isInstanceOf[NumericType],
       s"topKPerGroup score column '$scoreCol' must be numeric, got " +
         s"${scoreType.simpleString}")
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_topk",
+      .agg(native("graft_topk",
         col(scoreCol).cast("double"), col(idCol).cast("long"), lit(k)).as("__graft_topk"))
       .select(groupCols.map(col) :+ posexplode(col("__graft_topk")): _*)
       .select(groupCols.map(col) ++ Seq(
@@ -451,10 +451,9 @@ object Selection {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(orderCols.nonEmpty, "orderCols must be non-empty")
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.plans.HashExpressions.register(df.sparkSession)
     val payloadCols = df.columns.filterNot(groupCols.contains).toSeq
     df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_topk_rows",
+      .agg(native("graft_topk_rows",
         struct(orderCols.map(col): _*),
         struct(payloadCols.map(col): _*), lit(k)).as("__graft_rows"))
       .select(groupCols.map(col) :+ posexplode(col("__graft_rows")): _*)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.HashExpressions.native
 import graft.functions.Vectors
 import scala.util.Random
 
@@ -73,8 +74,8 @@ object SimilaritySearch {
   private def planeLit(p: Array[Double]): Column = array(p.map(lit): _*)
 
   /** Pack sign(v·h_i) bits into one integer bucket id — per-row expression
-    * (HOF form; kept as the registration-free Column API and the equivalence
-    * baseline the native form is pinned against). */
+    * (HOF form; kept as the equivalence baseline the native form is pinned
+    * against). */
   def lshBucket(vec: Column, dim: Int, planes: Int = 16, seed: Long = 42L): Column =
     hyperplanes(dim, planes, seed).zipWithIndex.map { case (p, i) =>
       when(Vectors.dot(vec, planeLit(p)) >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
@@ -82,10 +83,9 @@ object SimilaritySearch {
 
   /** Native bucket: one primitive planes×dim loop per row via
     * `graft_lsh_bucket` — the HOF form evaluates planes×dim interpreted
-    * lambda calls per row. Same fold order → identical buckets. Callers must
-    * have registered [[graft.plans.HashExpressions]]. */
+    * lambda calls per row. Same fold order → identical buckets. */
   private def lshBucketNative(vec: Column, dim: Int, planes: Int, seed: Long): Column =
-    call_function("graft_lsh_bucket", vec,
+    native("graft_lsh_bucket", vec,
       array(hyperplanes(dim, planes, seed).map(planeLit): _*))
 
   /** Brute-force cosine top-k against a single query vector. Scoring uses
@@ -93,10 +93,9 @@ object SimilaritySearch {
     * ExtensionsSpec), so the exact baseline is also the fast one. */
   def topK(corpus: DataFrame, idCol: String, vecCol: String,
            query: Array[Float], k: Int): DataFrame = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val q = array(query.map(x => lit(x.toDouble)): _*)
     corpus.select(col(idCol),
-        call_function("graft_cosine", col(vecCol), q).as("score"))
+        native("graft_cosine", col(vecCol), q).as("score"))
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
   }
@@ -115,7 +114,6 @@ object SimilaritySearch {
   def topKAll(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, queryIdCol: String,
               k: Int, excludeSelf: Boolean = true): DataFrame = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"))
     val q = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"))
     cosineTopK(c.crossJoin(broadcast(q)), k, excludeSelf)
@@ -130,7 +128,7 @@ object SimilaritySearch {
                          excludeSelf: Boolean = true): DataFrame = {
     val scored = (if (excludeSelf) paired.where(col("query_id") =!= col("corpus_id"))
                   else paired)
-      .withColumn("score", call_function("graft_cosine", col("__qv"), col("__cv")))
+      .withColumn("score", native("graft_cosine", col("__qv"), col("__cv")))
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("corpus_id"))
     scored.withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= k)
@@ -147,7 +145,6 @@ object SimilaritySearch {
                       idCol: String, vecCol: String, queryIdCol: String,
                       k: Int, dim: Int, planes: Int = 8,
                       seed: Long = 42L, multiProbe: Boolean = true): DataFrame = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val cb = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"),
       lshBucketNative(col(vecCol), dim, planes, seed).as("__bucket"))
     val qb0 = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"),
@@ -185,7 +182,7 @@ object SimilaritySearch {
       val centLit = array(cents.map(c => array(c.map(lit): _*)): _*)
       val means = corpus.where(col(vecCol).isNotNull)
         .select(
-          element_at(call_function("graft_nearest_cells", col(vecCol), centLit, lit(1)), 1)
+          element_at(native("graft_nearest_cells", col(vecCol), centLit, lit(1)), 1)
             .as("__cell"),
           posexplode(col(vecCol)).as(Seq("__i", "__x")))
         .where(col("__cell").isNotNull) // NULL-element vectors assign nowhere
@@ -205,10 +202,9 @@ object SimilaritySearch {
     * value is bit-identical (pinned in ExtensionsSpec). */
   private[graft] def quantizationError(corpus: DataFrame, vecCol: String,
                                        cents: Seq[Array[Double]]): Double = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val centLit = array(cents.map(c => array(c.map(lit): _*)): _*)
     corpus.select(avg(
-        call_function("graft_nearest_dist", col(vecCol), centLit)).as("e"))
+        native("graft_nearest_dist", col(vecCol), centLit)).as("e"))
       .head().getDouble(0)
   }
 
@@ -224,7 +220,6 @@ object SimilaritySearch {
   def trainIvf(corpus: DataFrame, idCol: String, vecCol: String,
                nlist: Int = 16, refineIters: Int = 2,
                refineSampleCap: Int = RefineSampleCap): Seq[Array[Double]] = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     if (refineIters <= 0)
       corpus.select(col(vecCol)).orderBy(xxhash64(col(idCol))).limit(nlist)
         .collect()
@@ -254,14 +249,13 @@ object SimilaritySearch {
   def ivfSearch(centroids: Seq[Array[Double]], corpus: DataFrame,
                 queries: DataFrame, idCol: String, vecCol: String,
                 queryIdCol: String, k: Int, nprobe: Int = 2): DataFrame = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val cents: Column = array(centroids
       .map(c => array(c.map(lit): _*)): _*)
     val corpusCell = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"),
-      element_at(call_function("graft_nearest_cells", col(vecCol), cents, lit(1)), 1)
+      element_at(native("graft_nearest_cells", col(vecCol), cents, lit(1)), 1)
         .as("__cell"))
     val queryCells = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"),
-        explode(call_function("graft_nearest_cells", col(vecCol), cents, lit(nprobe)))
+        explode(native("graft_nearest_cells", col(vecCol), cents, lit(nprobe)))
           .as("__cell"))
     cosineTopK(queryCells.join(corpusCell, "__cell"), k)
   }
@@ -296,10 +290,9 @@ object SimilaritySearch {
     * once at build time, not once per search batch. */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     centroids: Seq[Array[Double]], path: String): Unit = {
-    graft.plans.HashExpressions.register(corpus.sparkSession)
     val cents: Column = array(centroids.map(c => array(c.map(lit): _*)): _*)
     corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"),
-        element_at(call_function("graft_nearest_cells", col(vecCol), cents, lit(1)), 1)
+        element_at(native("graft_nearest_cells", col(vecCol), cents, lit(1)), 1)
           .as("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(path)
     // the quantizer ships INSIDE the index (underscore prefix → invisible to
@@ -320,11 +313,10 @@ object SimilaritySearch {
   def appendToIvfIndex(newRows: DataFrame, idCol: String, vecCol: String,
                        indexPath: String): Unit = {
     val spark = newRows.sparkSession
-    graft.plans.HashExpressions.register(spark)
     val centroids = loadCentroids(spark, s"$indexPath/_centroids")
     val cents: Column = array(centroids.map(c => array(c.map(lit): _*)): _*)
     newRows.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"),
-        element_at(call_function("graft_nearest_cells", col(vecCol), cents, lit(1)), 1)
+        element_at(native("graft_nearest_cells", col(vecCol), cents, lit(1)), 1)
           .as("cell"))
       .write.partitionBy("cell").mode("append").parquet(indexPath)
   }
@@ -348,11 +340,10 @@ object SimilaritySearch {
                        indexPath: String, centroids: Seq[Array[Double]],
                        queries: DataFrame, vecCol: String, queryIdCol: String,
                        k: Int, nprobe: Int = 2): DataFrame = {
-    graft.plans.HashExpressions.register(spark)
     val cents: Column = array(centroids.map(c => array(c.map(lit): _*)): _*)
     val queryCells = queries.select(col(queryIdCol).as("query_id"),
       col(vecCol).as("__qv"),
-      explode(call_function("graft_nearest_cells", col(vecCol), cents, lit(nprobe)))
+      explode(native("graft_nearest_cells", col(vecCol), cents, lit(nprobe)))
         .as("cell"))
     val probed = queryCells.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted
@@ -477,7 +468,6 @@ object SimilaritySearch {
                        dims: Int, k: Int): DataFrame = {
     require(dims >= 1, s"dims must be >= 1, got $dims")
     require(k >= 1, s"k must be >= 1, got $k") // recallAtK's former check
-    graft.plans.HashExpressions.register(df.sparkSession)
     val c = df.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"),
       slice(col(vecCol), 1, dims).as("__cvt"))
     val q = df.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
@@ -485,8 +475,8 @@ object SimilaritySearch {
     val scored = c.crossJoin(broadcast(q))
       .where(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"),
-        call_function("graft_cosine", col("__qv"), col("__cv")).as("__sf"),
-        call_function("graft_cosine", col("__qvt"), col("__cvt")).as("__st"))
+        native("graft_cosine", col("__qv"), col("__cv")).as("__sf"),
+        native("graft_cosine", col("__qvt"), col("__cvt")).as("__st"))
     val wf = Window.partitionBy("query_id")
       .orderBy(col("__sf").desc, col("corpus_id"))
     val wt = Window.partitionBy("query_id")
@@ -507,13 +497,12 @@ object SimilaritySearch {
     * embedding near-dup detection. */
   def lshSelfPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                    planes: Int = 16, seed: Long = 42L): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val sig = df.select(col(idCol).as("__id"), col(vecCol).as("__v"),
       lshBucketNative(col(vecCol), dim, planes, seed).as("__bucket"))
     val a = sig.select(col("__bucket"), col("__id").as("id_1"), col("__v").as("__v1"))
     val b = sig.select(col("__bucket"), col("__id").as("id_2"), col("__v").as("__v2"))
     a.join(b, Seq("__bucket")).where(col("id_1") < col("id_2"))
-      .withColumn("cosine", call_function("graft_cosine", col("__v1"), col("__v2")))
+      .withColumn("cosine", native("graft_cosine", col("__v1"), col("__v2")))
       .select("id_1", "id_2", "cosine")
   }
 }

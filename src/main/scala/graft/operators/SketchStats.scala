@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 
 /** Mergeable DISTINCT-COUNT sketch artifacts — the incremental-statistics
   * tier next to the per-batch sketches in [[HeavyHitters]]: persist a
@@ -140,9 +141,8 @@ object SketchStats {
   def kllSketchByGroup(df: DataFrame, groupCol: String, valueExpr: Column,
                        k: Int = 200): DataFrame = {
     require(k >= 8 && k <= 65535, s"k must be in [8, 65535], got $k")
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.groupBy(groupCol)
-      .agg(call_function("graft_kll_agg",
+      .agg(native("graft_kll_agg",
           valueExpr.cast("double"), lit(k)).as("sketch"),
         lit(k).as("kll_k"), count(valueExpr).as("n_rows"))
   }
@@ -154,7 +154,6 @@ object SketchStats {
     * DataSketches rule, surfaced via `min(kll_k)`). */
   def mergeKllByGroup(state: DataFrame, batch: DataFrame,
                       groupCol: String): DataFrame = {
-    graft.plans.HashExpressions.register(state.sparkSession)
     val unioned = state
       .select(col(groupCol), col("sketch"), col("kll_k"), col("n_rows"))
       .unionByName(batch.select(col(groupCol), col("sketch"), col("kll_k"),
@@ -170,17 +169,17 @@ object SketchStats {
     val k = kRow.getInt(0)
     unioned
       .groupBy(groupCol)
-      .agg(call_function("graft_kll_agg", col("sketch"), lit(k)).as("sketch"),
+      .agg(native("graft_kll_agg", col("sketch"), lit(k)).as("sketch"),
         min(col("kll_k")).as("kll_k"), sum(col("n_rows")).as("n_rows"))
   }
 
   /** Quantile estimate column over a KLL artifact's sketch column. */
   def kllQuantile(sketch: Column, p: Double): Column =
-    call_function("graft_kll_quantile", sketch, lit(p))
+    native("graft_kll_quantile", sketch, lit(p))
 
   /** Normalized-rank estimate column over a KLL artifact's sketch column. */
   def kllRank(sketch: Column, v: Column): Column =
-    call_function("graft_kll_rank", sketch, v.cast("double"))
+    native("graft_kll_rank", sketch, v.cast("double"))
 
   def save(artifact: DataFrame, path: String): Unit =
     artifact.coalesce(1).write.mode("overwrite").parquet(path)

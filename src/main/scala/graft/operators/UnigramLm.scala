@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.HashExpressions.native
 
 /** Unigram-language-model subword tokenizer [Kudo, ACL 2018] — the
   * SentencePiece algorithm, completing the real-tokenizer roster next to
@@ -60,9 +61,8 @@ object UnigramLm {
     require(vocabSize > 0 && emIters > 0 && seedMaxPieceLen > 0 && seedSize > 0,
       "vocabSize, emIters, seedMaxPieceLen, seedSize must be positive")
     require(pruneFrac > 0 && pruneFrac < 1, "pruneFrac must be in (0, 1)")
-    graft.plans.HashExpressions.register(df.sparkSession)
     val wordFreqs: Array[(String, Long)] = df
-      .select(explode(call_function("graft_bpe_words", col(textCol))).as("w"))
+      .select(explode(native("graft_bpe_words", col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w")).limit(maxWordTypes)
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -262,20 +262,18 @@ object UnigramLm {
   /** Subword tokens per row via the native `graft_unigram_tokens`. */
   def tokens(df: DataFrame, textCol: String, model: UnigramModel,
              outCol: String = "unigram_tokens"): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val (ps, ls) = piecesLit(model)
     df.withColumn(outCol,
-      call_function("graft_unigram_tokens", col(textCol), ps, ls))
+      native("graft_unigram_tokens", col(textCol), ps, ls))
   }
 
   /** Real-model token count — the budgeting input for [[Packing]],
     * interchangeable with [[Bpe.tokenCount]]. */
   def tokenCount(df: DataFrame, textCol: String, model: UnigramModel,
                  outCol: String = "n_unigram_tokens"): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val (ps, ls) = piecesLit(model)
     df.withColumn(outCol,
-      size(call_function("graft_unigram_tokens", col(textCol), ps, ls)))
+      size(native("graft_unigram_tokens", col(textCol), ps, ls)))
   }
 
   /** Persist / load the piece table — the tokenizer artifact. */

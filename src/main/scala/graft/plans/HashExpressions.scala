@@ -1,7 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -136,9 +138,11 @@ case class ShingleHashesExpr(text: Expression, k: Expression)
 }
 
 /** Standard Spark extensions entry point: registers the native functions at
-  * session build time —
+  * session build time, for SQL text —
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. Operators need
+  * neither this nor `HashExpressions.register`: they build the expressions
+  * directly through `HashExpressions.native`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
@@ -158,9 +162,9 @@ object HashExpressions {
       implicit ct: scala.reflect.ClassTag[E]): NativeFunction =
     NativeFunction(name, ct.runtimeClass, build)
 
-  /** Every `graft_*` function, listed once: both wiring paths
-    * (`GraftExtensions` at session build time, `register` on a live
-    * session) read this table. */
+  /** Every `graft_*` function, listed once: `native` (the Column API) and
+    * both SQL-text wiring paths (`GraftExtensions` at session build time,
+    * `register` on a live session) read this table. */
   val nativeFunctions: Seq[NativeFunction] = Seq(
     fn("graft_minhash_sig")(a => MinHashSignatureExpr(a(0), a(1))),
     fn("graft_simhash")(a => SimHash64Expr(a(0))),
@@ -176,8 +180,8 @@ object HashExpressions {
     fn("graft_pq_lut")(a => PqLutExpr(a(0), a(1))),
     fn("graft_pq_adc")(a => PqAdcExpr(a(0), a(1))),
     // Spark's own bloom-filter pair (used internally by runtime join
-    // filters) exposed as callable functions: the analyzer wraps the
-    // AggregateFunction in an AggregateExpression on resolution.
+    // filters) exposed as callable functions: `native` (or, for SQL text,
+    // the analyzer) wraps the AggregateFunction in an AggregateExpression.
     fn("graft_bloom_agg")(a =>
       new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(a(0), a(1))),
     fn("graft_bloom_contains")(a => BloomFilterMightContain(a(0), a(1))),
@@ -197,8 +201,23 @@ object HashExpressions {
     fn("graft_kll_quantile")(a => KllQuantileExpr(a(0), a(1))),
     fn("graft_kll_rank")(a => KllRankExpr(a(0), a(1))))
 
-  /** Register the native functions in a session's registry (idempotent);
-    * callers then use `functions.call_function("graft_minhash_sig", ...)`. */
+  private lazy val byName: Map[String, NativeFunction] =
+    nativeFunctions.map(f => f.name -> f).toMap
+
+  /** The native function `name` over `args`, as a plain Column: the Catalyst
+    * expression is built here (an aggregate wrapped as the analyzer would
+    * wrap it), so no session registry is read or written. */
+  def native(name: String, args: Column*): Column = {
+    val f = byName.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown native function '$name'"))
+    ColumnBridge.column(f.build(args.map(ColumnBridge.expression)) match {
+      case a: AggregateFunction => a.toAggregateExpression()
+      case e => e
+    })
+  }
+
+  /** Register the native functions in a session's registry (idempotent), for
+    * SQL text: `spark.sql("SELECT graft_minhash_sig(...)")`. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     nativeFunctions.foreach(f =>

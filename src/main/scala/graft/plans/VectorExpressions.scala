@@ -31,20 +31,15 @@ case class CosineSimilarityExpr(a: Expression, b: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_cosine"
 
-  override def checkInputDataTypes(): TypeCheckResult = (a.dataType, b.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (VecArgs.isVector(a.dataType) && VecArgs.isVector(b.dataType))
       TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
+    else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires two ARRAY<FLOAT> or ARRAY<DOUBLE> arguments, " +
         s"got ${a.dataType.simpleString} and ${b.dataType.simpleString}")
-  }
 
-  private def elemIsFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  @transient private lazy val aFloat = elemIsFloat(a)
-  @transient private lazy val bFloat = elemIsFloat(b)
+  @transient private lazy val aFloat = VecArgs.isFloat(a.dataType)
+  @transient private lazy val bFloat = VecArgs.isFloat(b.dataType)
 
   override def nullSafeEval(x: Any, y: Any): Any = {
     val va = x.asInstanceOf[ArrayData]
@@ -118,7 +113,7 @@ case class CosineSimilarityExpr(a: Expression, b: Expression)
   * ExtensionsSpec).
   */
 case class HyperplaneBucketExpr(vec: Expression, planes: Expression)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with CodegenFallback with VectorArg {
 
   override def left: Expression = vec
   override def right: Expression = planes
@@ -126,19 +121,8 @@ case class HyperplaneBucketExpr(vec: Expression, planes: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_lsh_bucket"
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    val planesOk = planes.dataType match {
-      case ArrayType(ArrayType(FloatType | DoubleType, _), _) => true
-      case _ => false
-    }
-    if (!vecOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: vec must be ARRAY<FLOAT|DOUBLE>, got ${vec.dataType.simpleString}")
-    else if (!planesOk || !planes.foldable)
+  override def checkInputDataTypes(): TypeCheckResult = checkVec {
+    if (!VecArgs.isMatrix(planes.dataType) || !planes.foldable)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName: planes must be a foldable ARRAY<ARRAY<FLOAT|DOUBLE>>")
     else {
@@ -155,37 +139,13 @@ case class HyperplaneBucketExpr(vec: Expression, planes: Expression)
     }
   }
 
-  @transient private lazy val vecFloat = vec.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  @transient private lazy val mat: Array[Array[Double]] = {
-    val outerFloat = planes.dataType match {
-      case ArrayType(ArrayType(FloatType, _), _) => true
-      case _ => false
-    }
-    val ad = planes.eval(null).asInstanceOf[ArrayData]
-    Array.tabulate(ad.numElements()) { i =>
-      val inner = ad.getArray(i)
-      Array.tabulate(inner.numElements()) { j =>
-        if (outerFloat) inner.getFloat(j).toDouble else inner.getDouble(j)
-      }
-    }
-  }
+  @transient private lazy val mat: Array[Array[Double]] = VecArgs.matrix(planes)
 
   // Override eval so the foldable planes literal is never re-built per row.
   override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    if (v == null) return null
-    val va = v.asInstanceOf[ArrayData]
-    val dim = va.numElements()
-    val x = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (va.isNullAt(i)) return null
-      x(i) = if (vecFloat) va.getFloat(i).toDouble else va.getDouble(i)
-      i += 1
-    }
+    val x = evalVec(input)
+    if (x == null) return null
+    val dim = x.length
     var bucket = 0L
     var p = 0
     while (p < mat.length) {
@@ -221,7 +181,7 @@ case class HyperplaneBucketExpr(vec: Expression, planes: Expression)
   * fold, and the (distance, index) tie-break mirrors the struct sort.
   */
 case class NearestCentroidsExpr(vec: Expression, centroids: Expression, n: Expression)
-  extends TernaryExpression with CodegenFallback {
+  extends TernaryExpression with CodegenFallback with VectorArg {
 
   override def first: Expression = vec
   override def second: Expression = centroids
@@ -230,19 +190,8 @@ case class NearestCentroidsExpr(vec: Expression, centroids: Expression, n: Expre
   override def nullable: Boolean = true
   override def prettyName: String = "graft_nearest_cells"
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    val centsOk = centroids.dataType match {
-      case ArrayType(ArrayType(FloatType | DoubleType, _), _) => true
-      case _ => false
-    }
-    if (!vecOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: vec must be ARRAY<FLOAT|DOUBLE>, got ${vec.dataType.simpleString}")
-    else if (!centsOk || !centroids.foldable)
+  override def checkInputDataTypes(): TypeCheckResult = checkVec {
+    if (!VecArgs.isMatrix(centroids.dataType) || !centroids.foldable)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName: centroids must be a foldable ARRAY<ARRAY<FLOAT|DOUBLE>>")
     else if (n.dataType != IntegerType || !n.foldable)
@@ -258,41 +207,16 @@ case class NearestCentroidsExpr(vec: Expression, centroids: Expression, n: Expre
     }
   }
 
-  @transient private lazy val vecFloat = vec.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
   // centroids/n are foldable: evaluate once per task, not per row.
-  @transient private lazy val cents: Array[Array[Double]] = {
-    val outerFloat = centroids.dataType match {
-      case ArrayType(ArrayType(FloatType, _), _) => true
-      case _ => false
-    }
-    val ad = centroids.eval(null).asInstanceOf[ArrayData]
-    Array.tabulate(ad.numElements()) { i =>
-      val inner = ad.getArray(i)
-      Array.tabulate(inner.numElements()) { j =>
-        if (outerFloat) inner.getFloat(j).toDouble else inner.getDouble(j)
-      }
-    }
-  }
+  @transient private lazy val cents: Array[Array[Double]] = VecArgs.matrix(centroids)
   @transient private lazy val topN: Int = n.eval(null).asInstanceOf[Int]
 
   // Override eval (not nullSafeEval) so the centroid literal is never
   // re-evaluated per row.
   override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    if (v == null) return null
-    val va = v.asInstanceOf[ArrayData]
-    val dim = va.numElements()
-    val x = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (va.isNullAt(i)) return null
-      x(i) = if (vecFloat) va.getFloat(i).toDouble else va.getDouble(i)
-      i += 1
-    }
+    val x = evalVec(input)
+    if (x == null) return null
+    val dim = x.length
     val m = cents.length
     val d2 = new Array[Double](m)
     var c = 0
@@ -338,7 +262,7 @@ case class NearestCentroidsExpr(vec: Expression, centroids: Expression, n: Expre
   * the interpreted HOF fold it replaces — pinned in ExtensionsSpec.
   * `centroids` must be a foldable literal (evaluated once per task). */
 case class NearestCentroidDistExpr(vec: Expression, centroids: Expression)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with CodegenFallback with VectorArg {
 
   override def left: Expression = vec
   override def right: Expression = centroids
@@ -346,19 +270,8 @@ case class NearestCentroidDistExpr(vec: Expression, centroids: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_nearest_dist"
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    val centsOk = centroids.dataType match {
-      case ArrayType(ArrayType(FloatType | DoubleType, _), _) => true
-      case _ => false
-    }
-    if (!vecOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: vec must be ARRAY<FLOAT|DOUBLE>, got ${vec.dataType.simpleString}")
-    else if (!centsOk || !centroids.foldable)
+  override def checkInputDataTypes(): TypeCheckResult = checkVec {
+    if (!VecArgs.isMatrix(centroids.dataType) || !centroids.foldable)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName: centroids must be a foldable ARRAY<ARRAY<FLOAT|DOUBLE>>")
     else if (centroids.eval(null) == null ||
@@ -368,36 +281,12 @@ case class NearestCentroidDistExpr(vec: Expression, centroids: Expression)
     else TypeCheckResult.TypeCheckSuccess
   }
 
-  @transient private lazy val vecFloat = vec.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  @transient private lazy val cents: Array[Array[Double]] = {
-    val outerFloat = centroids.dataType match {
-      case ArrayType(ArrayType(FloatType, _), _) => true
-      case _ => false
-    }
-    val ad = centroids.eval(null).asInstanceOf[ArrayData]
-    Array.tabulate(ad.numElements()) { i =>
-      val inner = ad.getArray(i)
-      Array.tabulate(inner.numElements()) { j =>
-        if (outerFloat) inner.getFloat(j).toDouble else inner.getDouble(j)
-      }
-    }
-  }
+  @transient private lazy val cents: Array[Array[Double]] = VecArgs.matrix(centroids)
 
   override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    if (v == null) return null
-    val va = v.asInstanceOf[ArrayData]
-    val dim = va.numElements()
-    val x = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (va.isNullAt(i)) return null
-      x(i) = if (vecFloat) va.getFloat(i).toDouble else va.getDouble(i)
-      i += 1
-    }
+    val x = evalVec(input)
+    if (x == null) return null
+    val dim = x.length
     var best = Double.PositiveInfinity
     var c = 0
     while (c < cents.length) {
@@ -431,7 +320,7 @@ case class NearestCentroidDistExpr(vec: Expression, centroids: Expression)
   * foldable m × ksub × dsub literal; m·dsub must equal the vector dim, else
   * NULL (not truncation). */
 case class PqEncodeExpr(vec: Expression, codebooks: Expression)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with CodegenFallback with VectorArg {
 
   override def left: Expression = vec
   override def right: Expression = codebooks
@@ -439,45 +328,21 @@ case class PqEncodeExpr(vec: Expression, codebooks: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_encode"
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    val cbOk = codebooks.dataType match {
-      case ArrayType(ArrayType(ArrayType(FloatType | DoubleType, _), _), _) => true
-      case _ => false
-    }
-    if (!vecOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: vec must be ARRAY<FLOAT|DOUBLE>, got ${vec.dataType.simpleString}")
-    else if (!cbOk || !codebooks.foldable)
+  override def checkInputDataTypes(): TypeCheckResult = checkVec {
+    if (!VecArgs.isCodebooks(codebooks.dataType) || !codebooks.foldable)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName: codebooks must be a foldable ARRAY<ARRAY<ARRAY<FLOAT|DOUBLE>>>")
     else TypeCheckResult.TypeCheckSuccess
   }
 
-  @transient private lazy val vecFloat = vec.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
   // (m)(ksub)(dsub), evaluated once per task — foldable literal.
   @transient private lazy val cb: Array[Array[Array[Double]]] =
-    PqExprUtil.materializeCodebooks(codebooks)
+    VecArgs.codebooks(codebooks)
 
   override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    if (v == null) return null
-    val va = v.asInstanceOf[ArrayData]
-    val dim = va.numElements()
-    val x = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (va.isNullAt(i)) return null
-      x(i) = if (vecFloat) va.getFloat(i).toDouble else va.getDouble(i)
-      i += 1
-    }
+    val x = evalVec(input)
+    if (x == null) return null
+    val dim = x.length
     val m = cb.length
     if (m == 0 || cb(0).length == 0) return null
     val dsub = cb(0)(0).length
@@ -515,7 +380,7 @@ case class PqEncodeExpr(vec: Expression, codebooks: Expression)
   * Computed ONCE per query row; after that every candidate's distance is m
   * lookups ([[PqAdcExpr]]). Same NULL/dim rules as [[PqEncodeExpr]]. */
 case class PqLutExpr(vec: Expression, codebooks: Expression)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with CodegenFallback with VectorArg {
 
   override def left: Expression = vec
   override def right: Expression = codebooks
@@ -523,43 +388,20 @@ case class PqLutExpr(vec: Expression, codebooks: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_lut"
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    val cbOk = codebooks.dataType match {
-      case ArrayType(ArrayType(ArrayType(FloatType | DoubleType, _), _), _) => true
-      case _ => false
-    }
-    if (!vecOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: vec must be ARRAY<FLOAT|DOUBLE>, got ${vec.dataType.simpleString}")
-    else if (!cbOk || !codebooks.foldable)
+  override def checkInputDataTypes(): TypeCheckResult = checkVec {
+    if (!VecArgs.isCodebooks(codebooks.dataType) || !codebooks.foldable)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName: codebooks must be a foldable ARRAY<ARRAY<ARRAY<FLOAT|DOUBLE>>>")
     else TypeCheckResult.TypeCheckSuccess
   }
 
-  @transient private lazy val vecFloat = vec.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
   @transient private lazy val cb: Array[Array[Array[Double]]] =
-    PqExprUtil.materializeCodebooks(codebooks)
+    VecArgs.codebooks(codebooks)
 
   override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    if (v == null) return null
-    val va = v.asInstanceOf[ArrayData]
-    val dim = va.numElements()
-    val x = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (va.isNullAt(i)) return null
-      x(i) = if (vecFloat) va.getFloat(i).toDouble else va.getDouble(i)
-      i += 1
-    }
+    val x = evalVec(input)
+    if (x == null) return null
+    val dim = x.length
     val m = cb.length
     if (m == 0 || cb(0).length == 0) return null
     val ksub = cb(0).length
@@ -654,7 +496,7 @@ case class PqAdcExpr(codes: Expression, lut: Expression)
   * in double precision — bit-identical to the HOF form (pinned in PcaSpec).
   * NULL vector or length ≠ D yields NULL, same contract as the HOF wrapper. */
 case class PcaProjectExpr(vec: Expression, mean: Expression, comps: Expression)
-  extends TernaryExpression with CodegenFallback {
+  extends TernaryExpression with CodegenFallback with VectorArg {
 
   override def first: Expression = vec
   override def second: Expression = mean
@@ -664,10 +506,6 @@ case class PcaProjectExpr(vec: Expression, mean: Expression, comps: Expression)
   override def prettyName: String = "graft_pca_project"
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
     val meanOk = mean.dataType match {
       case ArrayType(DoubleType, _) => mean.foldable
       case _ => false
@@ -676,30 +514,20 @@ case class PcaProjectExpr(vec: Expression, mean: Expression, comps: Expression)
       case ArrayType(ArrayType(DoubleType, _), _) => comps.foldable
       case _ => false
     }
-    if (!vecOk) TypeCheckResult.TypeCheckFailure(
-      s"$prettyName: vec must be ARRAY<FLOAT|DOUBLE>, got ${vec.dataType.simpleString}")
-    else if (!meanOk) TypeCheckResult.TypeCheckFailure(
-      s"$prettyName: mean must be a foldable ARRAY<DOUBLE>")
-    else if (!compsOk) TypeCheckResult.TypeCheckFailure(
-      s"$prettyName: components must be a foldable ARRAY<ARRAY<DOUBLE>>")
-    else TypeCheckResult.TypeCheckSuccess
+    checkVec {
+      if (!meanOk) TypeCheckResult.TypeCheckFailure(
+        s"$prettyName: mean must be a foldable ARRAY<DOUBLE>")
+      else if (!compsOk) TypeCheckResult.TypeCheckFailure(
+        s"$prettyName: components must be a foldable ARRAY<ARRAY<DOUBLE>>")
+      else TypeCheckResult.TypeCheckSuccess
+    }
   }
 
-  @transient private lazy val vecFloat = vec.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
   @transient private lazy val mu: Array[Double] = {
     val ad = mean.eval(null).asInstanceOf[ArrayData]
     Array.tabulate(ad.numElements())(ad.getDouble)
   }
-  @transient private lazy val w: Array[Array[Double]] = {
-    val ad = comps.eval(null).asInstanceOf[ArrayData]
-    Array.tabulate(ad.numElements()) { k =>
-      val row = ad.getArray(k)
-      Array.tabulate(row.numElements())(row.getDouble)
-    }
-  }
+  @transient private lazy val w: Array[Array[Double]] = VecArgs.matrix(comps)
 
   override def nullSafeEval(v: Any, m: Any, c: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
@@ -730,23 +558,75 @@ case class PcaProjectExpr(vec: Expression, mean: Expression, comps: Expression)
     copy(vec = f, mean = s, comps = t)
 }
 
-private[plans] object PqExprUtil {
-  /** Materialize a foldable m × ksub × dsub codebook literal to JVM arrays
-    * (called once per task from the expressions' lazy vals). */
-  def materializeCodebooks(codebooks: Expression): Array[Array[Array[Double]]] = {
-    val innerFloat = codebooks.dataType match {
-      case ArrayType(ArrayType(ArrayType(FloatType, _), _), _) => true
-      case _ => false
+/** The `vec ARRAY<FLOAT|DOUBLE>` first argument of the vector expressions:
+  * its type check and its per-row decode to doubles. */
+private[plans] trait VectorArg { self: Expression =>
+  def vec: Expression
+
+  @transient protected lazy val vecFloat: Boolean = VecArgs.isFloat(vec.dataType)
+
+  /** Fails unless `vec` is ARRAY<FLOAT|DOUBLE>; otherwise the expression's
+    * own checks. */
+  protected def checkVec(rest: => TypeCheckResult): TypeCheckResult =
+    if (VecArgs.isVector(vec.dataType)) rest
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName: vec must be ARRAY<FLOAT|DOUBLE>, got ${vec.dataType.simpleString}")
+
+  /** `vec` widened to doubles, or null for a NULL vector or any NULL element
+    * (the HOF fold's `acc + null → null`). */
+  protected def evalVec(input: InternalRow): Array[Double] = {
+    val v = vec.eval(input)
+    if (v == null) return null
+    val va = v.asInstanceOf[ArrayData]
+    val x = new Array[Double](va.numElements())
+    var i = 0
+    while (i < x.length) {
+      if (va.isNullAt(i)) return null
+      x(i) = if (vecFloat) va.getFloat(i).toDouble else va.getDouble(i)
+      i += 1
     }
-    val outer = codebooks.eval(null).asInstanceOf[ArrayData]
-    Array.tabulate(outer.numElements()) { mi =>
-      val book = outer.getArray(mi)
-      Array.tabulate(book.numElements()) { c =>
-        val cent = book.getArray(c)
-        Array.tabulate(cent.numElements()) { j =>
-          if (innerFloat) cent.getFloat(j).toDouble else cent.getDouble(j)
-        }
+    x
+  }
+}
+
+private[plans] object VecArgs {
+  def isVector(t: DataType): Boolean = t match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
+  def isMatrix(t: DataType): Boolean = t match {
+    case ArrayType(row, _) => isVector(row)
+    case _ => false
+  }
+  def isCodebooks(t: DataType): Boolean = t match {
+    case ArrayType(book, _) => isMatrix(book)
+    case _ => false
+  }
+
+  /** Whether the innermost element type is FLOAT (else DOUBLE). */
+  @scala.annotation.tailrec
+  def isFloat(t: DataType): Boolean = t match {
+    case ArrayType(e, _) => isFloat(e)
+    case other => other == FloatType
+  }
+
+  private def rows(ad: ArrayData, float: Boolean): Array[Array[Double]] =
+    Array.tabulate(ad.numElements()) { i =>
+      val inner = ad.getArray(i)
+      Array.tabulate(inner.numElements()) { j =>
+        if (float) inner.getFloat(j).toDouble else inner.getDouble(j)
       }
     }
+
+  /** Materialize a foldable rows × dim matrix literal to JVM arrays (called
+    * once per task from the expressions' lazy vals). */
+  def matrix(e: Expression): Array[Array[Double]] =
+    rows(e.eval(null).asInstanceOf[ArrayData], isFloat(e.dataType))
+
+  /** Materialize a foldable m × ksub × dsub codebook literal to JVM arrays. */
+  def codebooks(e: Expression): Array[Array[Array[Double]]] = {
+    val outer = e.eval(null).asInstanceOf[ArrayData]
+    val float = isFloat(e.dataType)
+    Array.tabulate(outer.numElements())(mi => rows(outer.getArray(mi), float))
   }
 }

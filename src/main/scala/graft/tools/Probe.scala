@@ -3,10 +3,9 @@ import org.apache.spark.sql.SparkSession
 /** Dev-only: drives the public API surface the way a library user would. */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    // SQL text below calls a native function: inject them at build time
+    val spark = graft.GraftSession.configure(SparkSession.builder().master("local[4]")
+      .withExtensions(new graft.plans.GraftExtensions), 4, "probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // 1. driver contract: flagship entry
     val e = graft.SparkEntry.entry(spark)

@@ -1015,4 +1015,87 @@ class ExtensionsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(c != a)
   }
+
+  // ---- operators need no function registration ----
+
+  /** A session with its own function registry, holding only Spark's
+    * built-ins: no graft_* function is registered in it. */
+  private def freshSession(): org.apache.spark.sql.SparkSession = {
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("graft_cosine"))
+    fresh
+  }
+
+  test("text helpers work in a session where no graft function is registered") {
+    def run(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      Seq((1, "cafe\u0301 " + "lorem ipsum " * 8), (2, "plain text, short"))
+        .toDF("id", "t")
+        .select(col("id"), TextAnalysis.nfcNormalize(col("t")).as("nfc"),
+          TextAnalysis.compressionRatio(col("t")).as("ratio"),
+          TextAnalysis.winnowFingerprints(col("t"), k = 4, w = 3).as("fp"))
+        .orderBy("id").collect().toSeq
+    }
+    val fresh = freshSession()
+    val got = run(fresh)
+    assert(got.head.getString(1).startsWith("caf\u00e9 "))
+    assert(got.head.getDouble(2) < 1.0 && got.head.getSeq[Long](3).nonEmpty)
+    assert(got == run(spark))
+    assert(!fresh.catalog.functionExists("graft_nfc"))
+    // an unknown native name fails when the Column is built, naming it
+    val bad = intercept[IllegalArgumentException](
+      graft.plans.HashExpressions.native("graft_nope", col("t")))
+    assert(bad.getMessage.contains("graft_nope"))
+  }
+
+  test("topKAll and keepLatest in a fresh session equal the shared session's rows; " +
+    "nothing is registered") {
+    def run(s: org.apache.spark.sql.SparkSession) = {
+      val e = graft.sources.Tables.table(s, TestSpark.sf0001, "embeddings")
+      val top = SimilaritySearch.topKAll(e, e.where(col("vec_id") < 5),
+        "vec_id", "embedding", "vec_id", k = 3)
+        .orderBy("query_id", "rank").collect().toSeq
+      val ev = graft.sources.Tables.table(s, TestSpark.sf0001, "events")
+      val latest = Dedup.keepLatest(ev, Seq("user_id"), Seq("ts", "event_id"))
+        .select("user_id", "event_id").orderBy("user_id").collect().toSeq
+      (top, latest)
+    }
+    val fresh = freshSession()
+    val (top, latest) = run(fresh)
+    assert(top.size == 15 && latest.nonEmpty)
+    assert((top, latest) == run(spark))
+    assert(!fresh.catalog.functionExists("graft_cosine"))
+    assert(!fresh.catalog.functionExists("graft_latest"))
+  }
+
+  test("dedupeAgainstFuzzy inside foreachBatch needs no registration before start()") {
+    val fresh = freshSession()
+    import fresh.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("sfuzzy-fresh").toString
+    val seen = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"))
+      .toDF("doc_id", "text")
+    def write(rows: Seq[(Long, String)]): Unit =
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(dir)
+    write(Seq(
+      (10L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"),
+      (11L, "completely different content with no overlap whatsoever here now")))
+    val kept = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = fresh.readStream.schema("doc_id LONG, text STRING").parquet(dir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        Dedup.dedupeAgainstFuzzy(batch, seen, "doc_id", "text", minJaccard = 0.8)
+          .select("doc_id").collect().foreach(r => kept.add(r.getLong(0)))
+      }
+      .start()
+    try {
+      q.processAllAvailable()
+      write(Seq((12L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda nu")))
+      q.processAllAvailable()
+    } finally q.stop()
+    // the same ids StreamingSpec keeps with the functions registered first
+    import scala.jdk.CollectionConverters._
+    assert(kept.asScala.toSeq.sorted == Seq(11L))
+    assert(!fresh.catalog.functionExists("graft_minhash_sig"))
+  }
 }

@@ -254,10 +254,8 @@ class StreamingSpec extends AnyFunSuite {
     write(Seq(
       (10L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"),
       (11L, "completely different content with no overlap whatsoever here now")))
-    // the micro-batch runs in a session CLONE whose function registry is
-    // snapshotted at query start — the graft functions must be registered on
-    // the driving session BEFORE start() (production sessions get this from
-    // GraftExtensions at build time; see Dedup.dedupeAgainstFuzzy's note)
+    // registering before start() is the SQL-text path; the operator itself
+    // needs no registration (ExtensionsSpec runs it in a fresh session)
     graft.plans.HashExpressions.register(spark)
     val stream = spark.readStream.schema("doc_id LONG, text STRING").parquet(dir)
     val q = stream.writeStream

@@ -5,13 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole ScalaTest run (Test/fork := true,
   * suites run sequentially in one JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.configure(
+      SparkSession.builder().master("local[4]"), 4, "graft-test")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .getOrCreate()

@@ -144,8 +144,8 @@ object ProductQuantization {
     * corpus side is only (id, m codes) — the raw vectors are never read at
     * search time. Scoring is `graft_pq_adc`: m lookups per (query, candidate)
     * pair; per-query top-k by ASCENDING asymmetric L2 distance. The query
-    * side broadcasts (same shape as [[SimilaritySearch.topKAll]]); corpus
-    * stays partition-parallel with zero shuffle before the top-k window.
+    * side broadcasts; corpus stays partition-parallel with zero shuffle
+    * before the top-k window.
     * For sublinear search, run over the probed cells of an IVF index
     * (IVF-PQ) instead of the full code table. */
   def pqTopKAll(corpusCodes: DataFrame, queries: DataFrame,

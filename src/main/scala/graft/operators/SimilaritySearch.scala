@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.CosineTopKAggregate
 import graft.plans.HashExpressions.native
 import graft.functions.Vectors
 import scala.util.Random
@@ -10,6 +14,9 @@ import scala.util.Random
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2c X3).
   *
+  *  - [[topKAll]] — exact cosine top-k for a small batch of queries: one
+  *    `graft_cosine_topk` corpus scan with k-bounded heaps per partition,
+  *    merged on the driver (quadratic arithmetic, but no pair rows).
   *  - [[topK]] — brute-force cosine top-k for ONE query vector: score is a
   *    per-row expression, `ORDER BY ... LIMIT k` plans as
   *    TakeOrderedAndProject (per-partition heaps + driver merge of k·P rows —
@@ -101,22 +108,33 @@ object SimilaritySearch {
   }
 
   /** Exact many-query top-k — the brute-force baseline the LSH/IVF paths are
-    * measured against (and the correctness oracle for them: fully
-    * SQL-expressible). The small query side broadcasts; every (query,
-    * corpus) pair is scored with the native cosine, a per-query window keeps
-    * the top k. Quadratic in corpus×queries BY DESIGN — use
-    * [[lshBucketedTopK]]/[[ivfTopK]] when the query side is large.
+    * measured against (and the correctness oracle for them). It runs when
+    * called: the query side is collected, so it must be small, and the
+    * corpus is scanned by one job of `graft_cosine_topk`
+    * ([[graft.plans.CosineTopKAggregate.run]]): each corpus vector's norm is
+    * folded once, each (query, corpus) pair costs one dot product, and each
+    * corpus partition keeps a k-bounded heap per query id, merged on the
+    * driver. The result is a local frame of at most queries × k rows.
+    * The ARITHMETIC is still quadratic in corpus×queries — use
+    * [[lshBucketedTopK]]/[[ivfTopK]] when the query side is large — but no
+    * pair row is ever built. Scores are bit-identical to `graft_cosine`;
+    * each query id's rows are ranked by (score DESC NULLS LAST, corpus_id),
+    * exactly as `ROW_NUMBER() OVER (PARTITION BY query_id ...)` ranks them,
+    * so duplicate query ids share one ranking.
     *
-    * @param excludeSelf drop pairs with query_id == corpus_id. ONLY valid
-    *   when `queries` shares `corpus`'s id space (self-search); with
-    *   unrelated id spaces a coincidental id match would silently drop a
-    *   genuine top-k candidate — pass false there. */
+    * @param excludeSelf drop pairs unless query_id <> corpus_id is TRUE.
+    *   ONLY valid when `queries` shares `corpus`'s id space (self-search);
+    *   with unrelated id spaces a coincidental id match would silently drop
+    *   a genuine top-k candidate — pass false there. */
   def topKAll(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, queryIdCol: String,
               k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"))
-    val q = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"))
-    cosineTopK(c.crossJoin(broadcast(q)), k, excludeSelf)
+    val (groups, hit) = CosineTopKAggregate.run(corpus, col(idCol), Seq(col(vecCol)),
+      queries, col(queryIdCol), Seq(col(vecCol)), k, excludeSelf)
+    val rows = for (g <- groups; (h, i) <- g.head.zipWithIndex)
+      yield Row(h.get(0), h.get(1), h.get(2), i + 1)
+    corpus.sparkSession.createDataFrame(rows.asJava,
+      StructType(hit.take(3) :+ StructField("rank", IntegerType, nullable = false)))
   }
 
   /** The exact re-rank every many-query search ends in: drop self pairs
@@ -451,15 +469,14 @@ object SimilaritySearch {
     * comparison over two [[ivfTopK]] frames and feed [[recallAtK]]
     * directly.
     *
-    * Both rankings are functions of the SAME (query, corpus) pair, so the
-    * pair set is materialized ONCE and scored with both cosines in one
-    * pass, then ranked twice over one hash exchange (both windows
-    * partition by query — the second only re-sorts). The composed
-    * two-[[topKAll]] spelling pays the quadratic cross join, the pair
-    * scoring pipeline and the window shuffle twice for identical
-    * arithmetic; the fused top-k SETS are reproduced exactly (same
-    * scores, same (score DESC, corpus_id) tie-break), pinned
-    * fused == composed in RetrievalEvalSpec.
+    * Both rankings are functions of the SAME (query, corpus) pair, so one
+    * `graft_cosine_topk` scan runs the full-width and the truncated scorer
+    * side by side: `df` is collected once as the query side and scanned
+    * once as the corpus, each scorer keeps its own k-bounded heaps, and
+    * `n_exact`/`n_hit` come from each query's two top-k lists — no pair row,
+    * join or window. The composed two-[[topKAll]] spelling computes the
+    * same top-k SETS (same scores, same (score DESC, corpus_id)
+    * tie-break), pinned fused == composed in RetrievalEvalSpec.
     *
     * A 4× dim truncation is a 4× cut in ANN index memory, scan bandwidth,
     * and distance FLOPs — at 100 TB the cheapest speedup available if this
@@ -468,29 +485,21 @@ object SimilaritySearch {
                        dims: Int, k: Int): DataFrame = {
     require(dims >= 1, s"dims must be >= 1, got $dims")
     require(k >= 1, s"k must be >= 1, got $k") // recallAtK's former check
-    val c = df.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"),
-      slice(col(vecCol), 1, dims).as("__cvt"))
-    val q = df.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-      slice(col(vecCol), 1, dims).as("__qvt"))
-    val scored = c.crossJoin(broadcast(q))
-      .where(col("query_id") =!= col("corpus_id"))
-      .select(col("query_id"), col("corpus_id"),
-        native("graft_cosine", col("__qv"), col("__cv")).as("__sf"),
-        native("graft_cosine", col("__qvt"), col("__cvt")).as("__st"))
-    val wf = Window.partitionBy("query_id")
-      .orderBy(col("__sf").desc, col("corpus_id"))
-    val wt = Window.partitionBy("query_id")
-      .orderBy(col("__st").desc, col("corpus_id"))
-    scored
-      .select(col("query_id"),
-        row_number().over(wf).as("__rf"), row_number().over(wt).as("__rt"))
-      .where(col("__rf") <= k)
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        count(when(col("__rt") <= k, lit(1))).as("n_hit"))
-      .select(col("query_id"), col("n_exact"), col("n_hit"),
-        (col("n_hit").cast("double") / col("n_exact").cast("double"))
-          .as("recall"))
+    val vecs = Seq(col(vecCol), slice(col(vecCol), 1, dims))
+    val (groups, hit) = CosineTopKAggregate.run(df, col(idCol), vecs,
+      df, col(idCol), vecs, k, excludeSelf = true)
+    val rows = groups.map { case Seq(full, truncated) =>
+      // a pair is (query, row): a hit is a full-width top-k pair that is
+      // also in the truncated top k
+      def pair(h: Row) = (h.getInt(3), h.getLong(4))
+      val inTruncated = truncated.map(pair).toSet
+      val nHit = full.count(h => inTruncated(pair(h))).toLong
+      Row(full.head.get(0), full.length.toLong, nHit, nHit.toDouble / full.length.toDouble)
+    }
+    df.sparkSession.createDataFrame(rows.asJava, StructType(Seq(hit.head,
+      StructField("n_exact", LongType, nullable = false),
+      StructField("n_hit", LongType, nullable = false),
+      StructField("recall", DoubleType))))
   }
 
   /** All same-bucket pairs with exact cosine — the candidate generator for

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import java.util.{Timer, TimerTask}
 import java.util.concurrent.atomic.AtomicBoolean
+import scala.util.DynamicVariable
 
 /** Query timeout — E6.
   *
@@ -27,7 +28,8 @@ object TimeoutGuard {
     * `cancelJobGroup` only hits jobs running at that instant, so a multi-job
     * body (e.g. an aligned read then a write) could start its NEXT job after
     * the deadline fired — the cancel keeps re-firing every 100ms until the
-    * body returns.
+    * body returns. Driver-side loops in the body see the deadline through
+    * [[checkDeadline]].
     *
     * A body that COMPLETES despite the deadline having fired (its last job
     * finished before the cancel landed) SUCCEEDS — the same semantics as
@@ -36,6 +38,17 @@ object TimeoutGuard {
     * when work was actually interrupted (the body threw after the deadline);
     * callers therefore never see a "timeout" for a load whose side effects
     * committed, and retry-on-timeout stays safe. */
+  private final case class Deadline(fired: AtomicBoolean, minutes: Long)
+
+  /** The guards the current thread runs inside, innermost first. */
+  private val active = new DynamicVariable[List[Deadline]](Nil)
+
+  /** Throws [[GraftTimeoutException]] once a guard around the caller has
+    * passed its deadline. Driver-side work that cancelling jobs cannot stop
+    * (E1's serial concat) calls this between its steps. */
+  private[graft] def checkDeadline(): Unit =
+    active.value.find(_.fired.get).foreach(d => throw new GraftTimeoutException(d.minutes))
+
   private[graft] def runMillis[T](spark: SparkSession, timeoutMs: Long,
                                   reportedMinutes: Long = 0)(body: => T): T = {
     val group = s"graft-timeout-${java.util.UUID.randomUUID()}"
@@ -50,7 +63,7 @@ object TimeoutGuard {
       def run(): Unit = { timedOut.set(true); sc.cancelJobGroup(group) }
     }, timeoutMs, 100L)
     try {
-      body
+      active.withValue(Deadline(timedOut, reportedMinutes) :: active.value)(body)
     } catch {
       // a NESTED guard's timeout keeps its own attribution — re-labeling it
       // as this (outer) guard's timeout would report the wrong deadline

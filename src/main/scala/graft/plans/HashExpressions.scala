@@ -197,6 +197,7 @@ object HashExpressions {
     fn("graft_latest")(a => LatestAggregate(a(0), a(1))),
     fn("graft_earliest")(a => LatestAggregate(a(0), a(1), earliest = true)),
     fn("graft_topk_rows")(a => TopKRowsAggregate(a(0), a(1), a(2))),
+    fn("graft_cosine_topk")(a => CosineTopKAggregate(a)),
     fn("graft_kll_agg")(a => KllAggregate(a(0), a(1))),
     fn("graft_kll_quantile")(a => KllQuantileExpr(a(0), a(1))),
     fn("graft_kll_rank")(a => KllRankExpr(a(0), a(1))))

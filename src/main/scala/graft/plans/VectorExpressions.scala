@@ -574,19 +574,8 @@ private[plans] trait VectorArg { self: Expression =>
 
   /** `vec` widened to doubles, or null for a NULL vector or any NULL element
     * (the HOF fold's `acc + null → null`). */
-  protected def evalVec(input: InternalRow): Array[Double] = {
-    val v = vec.eval(input)
-    if (v == null) return null
-    val va = v.asInstanceOf[ArrayData]
-    val x = new Array[Double](va.numElements())
-    var i = 0
-    while (i < x.length) {
-      if (va.isNullAt(i)) return null
-      x(i) = if (vecFloat) va.getFloat(i).toDouble else va.getDouble(i)
-      i += 1
-    }
-    x
-  }
+  protected def evalVec(input: InternalRow): Array[Double] =
+    VecArgs.decode(vec.eval(input), vecFloat)
 }
 
 private[plans] object VecArgs {
@@ -608,6 +597,39 @@ private[plans] object VecArgs {
   def isFloat(t: DataType): Boolean = t match {
     case ArrayType(e, _) => isFloat(e)
     case other => other == FloatType
+  }
+
+  /** An ARRAY<FLOAT|DOUBLE> value widened to doubles, or null for a NULL
+    * vector or any NULL element (the HOF fold's `acc + null → null`). */
+  def decode(v: Any, float: Boolean): Array[Double] = {
+    if (v == null) return null
+    val va = v.asInstanceOf[ArrayData]
+    val x = new Array[Double](va.numElements())
+    var i = 0
+    while (i < x.length) {
+      if (va.isNullAt(i)) return null
+      x(i) = if (float) va.getFloat(i).toDouble else va.getDouble(i)
+      i += 1
+    }
+    x
+  }
+
+  /** Σ x² folded left to right, as [[CosineSimilarityExpr]] folds a norm. */
+  def sumSquares(x: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < x.length) { s += x(i) * x(i); i += 1 }
+    s
+  }
+
+  /** A foldable ARRAY<ARRAY<FLOAT|DOUBLE>> literal as [[decode]]d rows: a
+    * NULL row, or one holding a NULL element, becomes null. */
+  def vectors(e: Expression): Array[Array[Double]] = {
+    val ad = e.eval(null).asInstanceOf[ArrayData]
+    val float = isFloat(e.dataType)
+    Array.tabulate(ad.numElements()) { i =>
+      if (ad.isNullAt(i)) null else decode(ad.getArray(i), float)
+    }
   }
 
   private def rows(ad: ArrayData, float: Boolean): Array[Array[Double]] =

@@ -1,10 +1,11 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, FileInputStream, FileOutputStream}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.operators.TimeoutGuard
 
 /** Shared exact-path single-file export machinery (used by
   * [[PgCsv.writeSingleFile]] and [[JsonL.writeSingleFile]]): the COMPUTE
@@ -19,7 +20,9 @@ import org.apache.spark.sql.functions._
   * Invariants held HERE so the formats can't drift: `.crc` sidecars are
   * excluded, parts concatenate in lexicographic name order (Spark part
   * numbering is zero-padded, so this is task order), and the temp dir is
-  * removed even on failure. The concat goes to a file inside the temp dir
+  * removed even on failure. The concat checks the enclosing
+  * [[TimeoutGuard]]'s deadline before every part and every chunk it copies,
+  * so E1's timeout covers it too. The concat goes to a file inside the temp dir
   * (same filesystem as the target) and is published with one atomic
   * rename, so the target holds either its previous bytes or the whole new
   * export — never a truncated one. */
@@ -41,7 +44,19 @@ private[sources] object SingleFile {
       val out = new BufferedOutputStream(new FileOutputStream(staged.toFile))
       try {
         header.foreach(out.write)
-        parts.foreach(p => Files.copy(p.toPath, out))
+        val chunk = new Array[Byte](1 << 16)
+        parts.foreach { p =>
+          TimeoutGuard.checkDeadline()
+          val in = new FileInputStream(p)
+          try {
+            var n = in.read(chunk)
+            while (n >= 0) {
+              TimeoutGuard.checkDeadline()
+              out.write(chunk, 0, n)
+              n = in.read(chunk)
+            }
+          } finally in.close()
+        }
       } finally out.close()
       Files.move(staged, Paths.get(targetPath),
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)

@@ -2,7 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan assertions — the plans that matter at 100 TB, pinned so a
   * refactor can't silently regress them: filters/columns must reach the
@@ -156,12 +161,70 @@ class PlanQualitySpec extends AnyFunSuite {
   test("ANN bucket joins are equi-joins — never a nested loop or cartesian") {
     // the LSH and IVF scale paths must join on the bucket/cell key; a
     // regression to BNLJ/cartesian is the exact O(n·m) blowup they exist
-    // to avoid (x03d topKAll is the DECLARED-exact cross-join baseline and
-    // is deliberately not pinned here)
+    // to avoid (the exact searches are pinned in the two tests below)
     Seq("x03b_ann_lsh_topk", "x03c_ann_ivf_topk").foreach { name =>
       val p = plan(name)
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         s"$name must equi-join on the bucket key:\n$p")
+    }
+  }
+
+  /** Every query execution `body` runs, with the name it was reported
+    * under; a marker action after `body` drains the listener bus. */
+  private def executions(body: => Unit): Seq[(String, QueryExecution)] = {
+    val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val marker = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("__marker")) marker.countDown()
+        else seen.add((name, qe))
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("__marker").collect()
+      assert(marker.await(30, TimeUnit.SECONDS), "the marker never reached the listener")
+      seen.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private val exactTopK = Seq("x03d_multi_query_topk", "x100_matryoshka_recall")
+
+  test("exact top-k is one graft_cosine_topk scan — never a nested loop, cartesian or window") {
+    // topKAll and matryoshkaRecall score pairs inside graft_cosine_topk; a
+    // pair join or a per-query window would bring back the N² pair rows.
+    // Their jobs run when the operator is called, so every execution of
+    // building and collecting the entry is checked.
+    exactTopK.foreach { name =>
+      val qes = executions(Queries.queries(name)(spark, TestSpark.sf0001).collect())
+      assert(qes.map(_._1).contains("graft_cosine_topk"), s"$name: ${qes.map(_._1)}")
+      qes.foreach { case (_, qe) =>
+        val p = qe.explainString(ExplainMode.fromString("formatted"))
+        assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct") &&
+          !p.contains("Window"), s"$name must not build pair rows:\n$p")
+      }
+    }
+  }
+
+  test("exact top-k materializes no pair rows: every operator outputs " +
+      "≤ |corpus| + |queries|·k·partitions rows") {
+    val embs = graft.sources.Tables.table(spark, TestSpark.sf0001, "embeddings")
+    val corpus = embs.count()
+    // x100 spreads its input over the default parallelism
+    val parts = math.max(embs.rdd.getNumPartitions, spark.sparkContext.defaultParallelism)
+    val rows = new AdaptiveSparkPlanHelper {}
+    exactTopK.zip(Seq((10L, 5), (corpus, 10))).foreach { case (name, (queries, k)) =>
+      val qes = executions(Queries.queries(name)(spark, TestSpark.sf0001).collect())
+      val widest = qes.flatMap { case (_, qe) =>
+        rows.collectWithSubqueries(qe.executedPlan) {
+          case n if n.metrics.contains("numOutputRows") =>
+            (n.metrics("numOutputRows").value, n.nodeName)
+        }
+      }.maxBy(_._1)
+      assert(widest._1 <= corpus + queries * k * parts,
+        s"$name: ${widest._2} output ${widest._1} rows; corpus $corpus, " +
+          s"queries $queries, k $k, partitions $parts")
     }
   }
 

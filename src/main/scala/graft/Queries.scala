@@ -23,6 +23,10 @@ import graft.sql.SqlRunner
   * Spark and DuckDB defaults differ (LENGTH→BIGINT in DuckDB vs INT in Spark,
   * SUM(BIGINT)→HUGEINT in DuckDB, CEIL(double)→LONG in Spark vs DOUBLE in
   * DuckDB).
+  *
+  * The streaming family lives in [[graft.queries.StreamingQueries]], built
+  * on the [[graft.queries.StreamReplay]] scaffold; [[all]] concatenates
+  * its list.
   */
 object Queries {
 
@@ -57,23 +61,6 @@ object Queries {
     SqlRunner.run(s, sql)
   }
 
-
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`, restored
-    * afterwards — the streaming gate entries size their STATE-STORE
-    * partition count to the stream instead of the session default (the
-    * r19 x116 lesson: a stream-stream join keeps 4 state stores per
-    * partition and every micro-batch commits a delta file per store, so at
-    * 32 session partitions the replay entries' wall time was checkpoint
-    * I/O, not operator work). The conf is read when the FIRST micro-batch
-    * is planned (async after start()), so it must stay set until the query
-    * stops — `body` must contain the whole start/drain/stop lifecycle.
-    * Entries run alone in Verify/Bench, so nothing else observes it. */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    try { s.conf.set("spark.sql.shuffle.partitions", n.toString); body }
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Canonical 2-decimal rounding: FLOOR(x*100 + 0.5)/100 in BOTH engines.
     * Unlike ROUND(double,2) — which Spark implements via exact BigDecimal
     * expansion and DuckDB via pow-multiply, diverging at representation ties —
@@ -82,7 +69,7 @@ object Queries {
     floor(c * 100 + 0.5) / 100
 
   /** 4-decimal sibling of [[round2]] — same fixed IEEE op sequence. */
-  private def round4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private[graft] def round4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     floor(c * 10000 + 0.5) / 10000
 
   // ---------------------------------------------------------------- Q1–Q8: scan/filter/expr/agg
@@ -1310,15 +1297,9 @@ SELECT vec_id, FLOOR(raw*100+0.5)/100 AS score FROM topk ORDER BY score DESC, ve
         graft.operators.SimilaritySearch
           .trainIvf(e, "vec_id", "embedding", nlist = 16, refineIters = 2))
       val idx = ivfIndexDirs.computeIfAbsent(d, _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-ivf-idx")
-        // the index holds a full corpus copy — reclaim it at JVM exit
-        // (deleteOnExit can't remove non-empty dirs)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(p.toFile)
-        }))
+        // the index holds a full corpus copy: a scratch dir, reclaimed at
+        // JVM exit
+        val p = graft.sources.Scratch.dir("graft-ivf-idx")
         graft.operators.SimilaritySearch.buildIvfIndex(
           e, "vec_id", "embedding", cents, p.toString)
         p.toString
@@ -3019,7 +3000,7 @@ FROM w ORDER BY doc_id"""))
     // and all.
     (s, d) => {
       val docs = t(s, d, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x24")
+      val tmp = graft.sources.Scratch.dir("graft-x24")
         .toString + "/docs.jsonl.gz"
       graft.sources.JsonL.writeSingleFile(docs, tmp, gzip = true)
       graft.sources.JsonL.read(s, tmp, docs.schema).orderBy("doc_id")
@@ -5371,57 +5352,6 @@ SELECT a.doc_id, a.n_windows,
 FROM agg a JOIN p USING (doc_id)
 ORDER BY a.doc_id"""))
 
-  private val x68 = DeclaredQuery("x68_streaming_latest_replay",
-    // The streaming ingest face driven END-TO-END inside the gate: events
-    // are split into four parquet replay files, streamed one file per
-    // micro-batch through EventStreams.latestPerKey (Complete mode, so the
-    // state store carries each user's current row ACROSS micro-batches via
-    // the graft_latest aggregate's serialize/merge contract), and the
-    // query's FINAL state table is returned. keepLatest's max_by semantics
-    // are arrival-order independent — whatever order the source lists the
-    // files in, the final state must equal the batch x48 spelling
-    // bit-for-bit, so the oracle is the SAME window SQL over events. This
-    // is the one entry where a streaming regression (state-store
-    // serialization, complete-mode re-emission, file-source replay) breaks
-    // the driver gate rather than only the specs.
-    (s, d) => {
-      val ev = t(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x68")
-      val ingest = tmp.resolve("ingest").toString
-      // four replay units in ONE write job (any split works — the point is
-      // the state must fold across batch boundaries, not within one, and
-      // keepLatest semantics make the result file-order independent)
-      ev.repartition(4).write.mode("overwrite").parquet(ingest)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-      // Complete mode has no file sink; foreachBatch overwrites a parquet
-      // dir per batch so the FINAL state table lands executor-side (the
-      // gate never buffers rows on the driver) and is read back as a
-      // batch frame for hashing.
-      val out = tmp.resolve("out").toString
-      // per-file replay face kept; state partitions sized to the stream
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
-          .latestPerKey(stream, Seq("user_id"), Seq("ts", "event_id"))
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(out)
-          }
-          .start()
-        try { q.processAllAvailable() } finally { q.stop() }
-      }
-      s.read.parquet(out)
-        .select("user_id", "event_id", "ts", "event_type", "value")
-        .orderBy("user_id")
-    },
-    Some("""SELECT user_id, event_id, ts, event_type, value FROM (
-  SELECT user_id, event_id, ts, event_type, value,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events) WHERE rn = 1 ORDER BY user_id"""))
-
   private val x69 = DeclaredQuery("x69_doremi_mixture",
     // DoReMi-style domain reweighting (MixtureOptimization.doremiWeights):
     // learn per-LANGUAGE mixture weights by alternating weighted proxy
@@ -5782,187 +5712,6 @@ SELECT ordering, CAST(COUNT(*) AS BIGINT) AS n_batches,
        1.0 - CAST(SUM(s) AS DOUBLE) / CAST(SUM(mx * c) AS DOUBLE) AS waste_ratio
 FROM per GROUP BY ordering ORDER BY ordering"""))
 
-  private val x78 = DeclaredQuery("x78_streaming_vocab_replay",
-    // the OTHER streaming face in the driver gate: documents split into
-    // three replay files, streamed one per micro-batch through
-    // DocumentStreams.vocabTracker — each batch loads the persisted
-    // per-language HLL artifact, folds the batch's words in, and swaps
-    // the state via the Hadoop-FS parked-rename protocol (three swaps per
-    // run, so a regression in the crash-safe swap or the merge contract
-    // breaks this entry). Rows-only SELF-VALIDATING: the final estimates
-    // must sit within 5% of the exact per-language distinct-word counts
-    // computed in-entry (the corpus vocabulary is small enough that HLL
-    // is usually in its exact sparse regime; the flag allows the bound,
-    // not just equality — the honest HLL contract).
-    (s, d) => {
-      val docs = t(s, d, "documents").select("doc_id", "lang", "text")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x78")
-      (0 until 3).foreach { i =>
-        docs.where(pmod(col("doc_id"), lit(3)) === i)
-          .select("lang", "text")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/b$i")
-      }
-      val src = s.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "lang STRING, text STRING"))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$tmp/b*")
-      val state = s"$tmp/state"
-      val q = graft.streaming.DocumentStreams.vocabTracker(
-        src, "lang", "text", state,
-        tmp.resolve("ckpt").toString)
-      try q.processAllAvailable() finally q.stop()
-      val est = graft.operators.SketchStats.load(s, state)
-        .select(col("__lang").as("lang"),
-          hll_sketch_estimate(col("sketch")).cast("long").as("est_distinct"))
-      val exact = docs
-        .select(col("lang"), explode(split(col("text"), "\\s+")).as("w"))
-        .where(length(col("w")) > 0)
-        .groupBy("lang").agg(count_distinct(col("w")).as("exact_distinct"))
-      est.join(exact, Seq("lang"))
-        .select(col("lang"), col("est_distinct"), col("exact_distinct"),
-          (abs(col("est_distinct").cast("double")
-            / col("exact_distinct").cast("double") - 1.0) <= 0.05)
-            .as("within_bound"))
-        .orderBy("lang")
-    },
-    None)
-
-  private val x79 = DeclaredQuery("x79_streaming_session_replay",
-    // sessionization driven END-TO-END through the stateful
-    // flatMapGroupsWithState path inside the gate (the x68 recipe applied
-    // to EventStreams.closedUserSessions): events replay in three
-    // micro-batches, each user's OPEN sessions live in the state store
-    // across batch boundaries, then two sentinel flush batches push the
-    // watermark past every seal point (the first advances the watermark,
-    // the no-data batch + event-time timeouts drain the remaining state).
-    // The watermark delay spans the whole event range, so no event is
-    // ever late regardless of how the files split the data — the sealed
-    // sessions must therefore equal batch session_window EXACTLY, and the
-    // oracle is x32c's gaps-and-islands spelling (strict 30-min break) at
-    // the operator's native microsecond precision. A regression in the
-    // interval-merge fold, the µs seal arithmetic, state encoding, or
-    // timeout draining breaks this entry, not just StreamingSpec.
-    (s, d) => {
-      val ev = t(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-      val span = ev.agg(
-        min(unix_millis(col("ts").cast("timestamp"))).as("lo"),
-        max(unix_millis(col("ts").cast("timestamp"))).as("hi")).head()
-      val (loMs, hiMs) = (span.getLong(0), span.getLong(1))
-      val gapMs = 30L * 60 * 1000
-      val delayMin = (hiMs - loMs) / 60000 + 60
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x79")
-      val ingest = tmp.resolve("ingest").toString
-      ev.repartition(3).write.mode("overwrite").parquet(ingest)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      // parquet file sink, not memory: sealed sessions land executor-side
-      // per micro-batch and the dir is read back as a batch frame — same
-      // rows, no driver buffering (the shape that must survive sf1).
-      val out = tmp.resolve("out").toString
-      val flushUser = 999999999L
-      def flush(tsMs: Long): Unit =
-        s.range(1).select(lit(0L).as("event_id"),
-            timestamp_millis(lit(tsMs)).cast("timestamp_ntz").as("ts"),
-            lit(flushUser).as("user_id"), lit("flush").as("event_type"),
-            lit(0.0).as("value"))
-          .coalesce(1).write.mode("append").parquet(ingest)
-      // per-file replay face kept; state partitions sized to the stream
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
-          .closedUserSessions(s, stream, gapMs = gapMs,
-            watermark = s"$delayMin minutes")
-          .toDF()
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .format("parquet").option("path", out).start()
-        try {
-          q.processAllAvailable()
-          flush(hiMs + delayMin * 60000 + gapMs + 3600000L)
-          q.processAllAvailable()
-          flush(hiMs + delayMin * 60000 + gapMs + 7200000L)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(out).where(col("user_id") =!= flushUser)
-        .select(col("user_id"),
-          timestamp_micros(col("start_us")).cast("timestamp_ntz")
-            .as("session_start"),
-          timestamp_micros(col("end_us")).cast("timestamp_ntz")
-            .as("session_end"),
-          col("n_events"))
-        .orderBy("user_id", "session_start")
-    },
-    Some("""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t FROM events),
-m AS (SELECT user_id, t,
-  CASE WHEN t >= LAG(t) OVER (PARTITION BY user_id ORDER BY t) + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
-  FROM e),
-s AS (SELECT user_id, t,
-  SUM(brk) OVER (PARTITION BY user_id ORDER BY t ROWS UNBOUNDED PRECEDING) AS sid FROM m)
-SELECT user_id, MIN(t) AS session_start, MAX(t) AS session_end,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM s GROUP BY user_id, sid ORDER BY user_id, session_start"""))
-
-  private val x80 = DeclaredQuery("x80_streaming_interval_join",
-    // stream-stream interval join END-TO-END in the gate: view events
-    // (impressions) and purchase events (conversions) replay as TWO
-    // watermarked file streams, three micro-batches each, through
-    // EventStreams.intervalJoin — every inner pair within [0, 6h] on the
-    // same user must emit exactly once, across whatever batch alignment
-    // the two sources happen to take. The watermark delay spans the whole
-    // event range so no buffered row is ever evicted before its matches
-    // arrive (state eviction under a TIGHT bound is pinned separately in
-    // StreamingSpec via state-store metrics); inner-join emission itself
-    // is watermark-independent, so the final pair set must equal the
-    // batch interval-overlap spelling bit-for-bit.
-    (s, d) => {
-      val ev = t(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type")
-      val span = ev.agg(
-        min(unix_millis(col("ts").cast("timestamp"))).as("lo"),
-        max(unix_millis(col("ts").cast("timestamp"))).as("hi")).head()
-      val delayMin = (span.getLong(1) - span.getLong(0)) / 60000 + 60
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x80")
-      val lDir = tmp.resolve("views").toString
-      val rDir = tmp.resolve("purchases").toString
-      ev.where(col("event_type") === "view")
-        .repartition(3).write.mode("overwrite").parquet(lDir)
-      ev.where(col("event_type") === "purchase")
-        .repartition(3).write.mode("overwrite").parquet(rDir)
-      def rd(p: String): DataFrame = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(p)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      // parquet file sink, not memory: joined pairs land executor-side per
-      // micro-batch; the dir is read back for hashing (no driver buffering).
-      val out = tmp.resolve("out").toString
-      // per-file replay face kept; state partitions sized to the stream
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
-          .intervalJoin(rd(lDir), rd(rDir), "user_id",
-            maxDelay = "6 hours", watermark = s"$delayMin minutes")
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .format("parquet").option("path", out).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.read.parquet(out)
-        .select(col("user_id"), col("l_id"), col("r_id"),
-          col("l_ts").cast("timestamp_ntz").as("l_ts"),
-          col("r_ts").cast("timestamp_ntz").as("r_ts"))
-        .orderBy("user_id", "l_id", "r_id")
-    },
-    Some("""SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id,
-       CAST(l.ts AS TIMESTAMP) AS l_ts, CAST(r.ts AS TIMESTAMP) AS r_ts
-FROM events l JOIN events r
-  ON l.user_id = r.user_id
- AND l.event_type = 'view' AND r.event_type = 'purchase'
- AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 6 HOUR
-ORDER BY l.user_id, l_id, r_id"""))
-
   private val x81 = DeclaredQuery("x81_fim_examples",
     // fill-in-the-middle example construction (Fim.fimExamples, Bavarian
     // et al. 2022): half the corpus hash-gated into PSM-order
@@ -6212,53 +5961,6 @@ SELECT *,
         AND dup_9gram_char_frac <= 0.11 AND dup_10gram_char_frac <= 0.10) AS keep
 FROM sig ORDER BY doc_id"""))
 
-  private val x86 = DeclaredQuery("x86_streaming_dedup_replay",
-    // the FOURTH stateful streaming kernel inside the driver gate
-    // (completing x68 aggregate-state / x79 flatMapGroupsWithState / x80
-    // join-state): cross-batch DEDUP state. Events replay in three
-    // micro-batches through EventStreams.dedupEvents
-    // (dropDuplicatesWithinWatermark on (user_id, event_type)); the
-    // watermark delay spans the whole event range so no key is ever
-    // evicted mid-replay, and a duplicate arriving in a LATER micro-batch
-    // than its first copy must still be suppressed by the state store.
-    // Which physical row survives depends on arrival order, so the entry
-    // projects the KEY SET — exactly the order-independent face — which
-    // must equal batch DISTINCT bit-for-bit. A regression in dedup state
-    // retention (keys forgotten between batches → extra rows would
-    // survive and the row count changes) or in eviction arithmetic breaks
-    // the gate hash.
-    (s, d) => {
-      val ev = t(s, d, "events").select("event_id", "ts", "user_id", "event_type")
-      val span = ev.agg(
-        min(unix_millis(col("ts").cast("timestamp"))).as("lo"),
-        max(unix_millis(col("ts").cast("timestamp"))).as("hi")).head()
-      val delayMin = (span.getLong(1) - span.getLong(0)) / 60000 + 60
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x86")
-      val ingest = tmp.resolve("ingest").toString
-      ev.repartition(3).write.mode("overwrite").parquet(ingest)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      // parquet file sink, not memory: surviving first-copies land
-      // executor-side per micro-batch; read back as a batch frame.
-      val out = tmp.resolve("out").toString
-      // per-file replay face kept; state partitions sized to the stream
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
-          .dedupEvents(stream, Seq("user_id", "event_type"),
-            watermark = s"$delayMin minutes")
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .format("parquet").option("path", out).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.read.parquet(out).select("user_id", "event_type")
-        .orderBy("user_id", "event_type")
-    },
-    Some("""SELECT DISTINCT user_id, event_type FROM events
-ORDER BY user_id, event_type"""))
-
   private val x87 = DeclaredQuery("x87_corpus_report",
     // the one-call corpus report card (Profiling.corpusReport): the fixed
     // (metric, value) contract a pipeline stamps on every data drop —
@@ -6487,88 +6189,6 @@ SELECT metric,
             THEN FLOOR(rb.value / ra.value * 10000 + 0.5) / 10000 END AS ratio
 FROM ra FULL OUTER JOIN rb USING (metric)
 ORDER BY metric"""))
-
-  private val x92 = DeclaredQuery("x92_streaming_outer_interval_join",
-    // the LEFT_OUTER face of the streaming interval join, driver-gated
-    // (x80 gates the inner face): every view must emit EXACTLY ONCE —
-    // with its purchase pairs if any arrived within [0, 6h], or ONE
-    // null-padded row after the watermark proves no match can still
-    // arrive. That sealing path (null emission only after the global
-    // watermark passes l_ts + maxDelay, driven by Spark's no-data
-    // batches) is the regression surface StreamingSpec alone guarded
-    // until r16. The x79 sentinel technique applied to TWO streams: the
-    // data replays in three micro-batches per side under a watermark
-    // delay spanning the whole event range (nothing is ever late), then
-    // two flush rows appended to EACH stream push the watermark past
-    // hi + maxDelay so every unmatched view seals and drains. Oracle:
-    // the batch LEFT JOIN with the identical interval condition
-    // (NULLS FIRST spelled to match Spark's ASC default).
-    (s, d) => {
-      val ev = t(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type")
-      val span = ev.agg(
-        min(unix_millis(col("ts").cast("timestamp"))).as("lo"),
-        max(unix_millis(col("ts").cast("timestamp"))).as("hi")).head()
-      val (loMs, hiMs) = (span.getLong(0), span.getLong(1))
-      val delayMin = (hiMs - loMs) / 60000 + 60
-      val maxDelayMs = 6L * 3600 * 1000
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x92")
-      val lDir = tmp.resolve("views").toString
-      val rDir = tmp.resolve("purchases").toString
-      ev.where(col("event_type") === "view")
-        .repartition(3).write.mode("overwrite").parquet(lDir)
-      ev.where(col("event_type") === "purchase")
-        .repartition(3).write.mode("overwrite").parquet(rDir)
-      def rd(p: String): DataFrame = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(p)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      // parquet file sink, not memory: matched pairs and the sealed
-      // null-padded rows land executor-side per micro-batch; the dir is
-      // read back for hashing (no driver buffering).
-      val out = tmp.resolve("out").toString
-      val flushUser = 999999999L
-      def flush(dir: String, tsMs: Long): Unit =
-        s.range(1).select(lit(0L).as("event_id"),
-            timestamp_millis(lit(tsMs)).cast("timestamp_ntz").as("ts"),
-            lit(flushUser).as("user_id"), lit("flush").as("event_type"))
-          .coalesce(1).write.mode("append").parquet(dir)
-      // per-file replay face KEPT (maxFilesPerTrigger=1 is this entry's
-      // point — cross-micro-batch pairing); state-store partitions sized
-      // to the stream, the r19 x116 lesson
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
-          .intervalJoin(rd(lDir), rd(rDir), "user_id",
-            maxDelay = "6 hours", watermark = s"$delayMin minutes",
-            joinType = "left_outer")
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .format("parquet").option("path", out).start()
-        try {
-          q.processAllAvailable()
-          // first flush advances both sides' watermarks past every seal
-          // point; the second (plus Spark's no-data batches) drains the
-          // now-provably-unmatched left state as null-padded rows
-          val seal1 = hiMs + delayMin * 60000 + maxDelayMs + 3600000L
-          flush(lDir, seal1); flush(rDir, seal1)
-          q.processAllAvailable()
-          flush(lDir, seal1 + 3600000L); flush(rDir, seal1 + 3600000L)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(out).where(col("user_id") =!= flushUser)
-        .select(col("user_id"), col("l_id"), col("r_id"),
-          col("l_ts").cast("timestamp_ntz").as("l_ts"),
-          col("r_ts").cast("timestamp_ntz").as("r_ts"))
-        .orderBy("user_id", "l_id", "r_id")
-    },
-    Some("""SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id,
-       CAST(l.ts AS TIMESTAMP) AS l_ts, CAST(r.ts AS TIMESTAMP) AS r_ts
-FROM (SELECT * FROM events WHERE event_type = 'view') l
-LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
-  ON l.user_id = r.user_id
- AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 6 HOUR
-ORDER BY l.user_id, l_id, r_id NULLS FIRST"""))
 
   private val x93 = DeclaredQuery("x93_bitext_margin_mining",
     // margin-based bitext mining (Bitext.minePairs — Artetxe & Schwenk
@@ -7066,49 +6686,6 @@ SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
              * 10000 + 0.5) / 10000 AS recall
 FROM j GROUP BY query_id ORDER BY query_id"""))
 
-  private val x101 = DeclaredQuery("x101_streaming_enrich",
-    // the STATELESS streaming face the stateful gates (x68/x79/x80/x86/
-    // x92) don't cover: stream-static dimension enrichment
-    // (EventStreams.enrichWithDim). Events replay in three micro-batches
-    // against a static per-user purchase-count dim; the static side is
-    // broadcast and re-planned per batch, no watermark, no join state —
-    // every event must emit EXACTLY ONCE, in its arrival batch, carrying
-    // its user's dim row (or NULL under left_outer for never-purchasing
-    // users). A regression in per-batch static re-planning, broadcast
-    // semantics, or left-preservation drops/duplicates/null-pads rows and
-    // breaks the batch LEFT JOIN hash.
-    (s, d) => {
-      val ev = t(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type")
-      val dim = ev.where(col("event_type") === "purchase")
-        .groupBy("user_id").agg(count(lit(1)).as("n_purchases"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x101")
-      val ingest = tmp.resolve("ingest").toString
-      ev.repartition(3).write.mode("overwrite").parquet(ingest)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-      // parquet file sink, not memory: the r16 100× gate run OOM'd the
-      // driver buffering ~30M enriched rows in a memory sink — the file
-      // sink keeps every batch executor-side with identical hash
-      // semantics (SCALE_SMOKE.md x101 post-mortem).
-      val out = tmp.resolve("out").toString
-      val q = graft.streaming.EventStreams
-        .enrichWithDim(stream, dim, Seq("user_id"), "left_outer")
-        .select("event_id", "user_id", "event_type", "n_purchases")
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .format("parquet").option("path", out).start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(out).orderBy("event_id", "user_id", "event_type")
-    },
-    Some("""WITH dim AS (
-  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_purchases
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id)
-SELECT e.event_id, e.user_id, e.event_type, dim.n_purchases
-FROM events e LEFT JOIN dim USING (user_id)
-ORDER BY e.event_id, e.user_id, e.event_type"""))
-
   private val x102 = DeclaredQuery("x102_precision_thresholds",
     // per-source precision-calibrated score cutoffs (Selection
     // .precisionThresholdPerGroup — the FineWeb-style per-dump
@@ -7570,7 +7147,7 @@ FROM p ORDER BY bin"""))
     // parquet discipline.
     (s, d) => {
       val docs = t(s, d, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x111")
+      val tmp = graft.sources.Scratch.dir("graft-x111")
       val path = tmp.resolve("docs_orc").toString
       docs.write.mode("overwrite").option("compression", "zlib").orc(path)
       s.read.orc(path)
@@ -7580,48 +7157,6 @@ FROM p ORDER BY bin"""))
     },
     Some("""SELECT doc_id, lang, source, n_chars FROM documents
 WHERE n_chars >= 200 ORDER BY doc_id"""))
-
-  private val x112 = DeclaredQuery("x112_streaming_blocklist",
-    // the filtering face of the stream-static family (x101 gates the
-    // enrichment face): EventStreams.excludeByDim drops every event whose
-    // user sits on a static blocklist (here: users with ≥ 20 purchases),
-    // via a stateless broadcast LEFT ANTI join re-planned per
-    // micro-batch. Events replay in three micro-batches; every surviving
-    // event must emit EXACTLY ONCE and every blocklisted user's events
-    // must ALL be absent — the batch NOT-EXISTS oracle breaks on a
-    // dropped, duplicated, or leaked row.
-    (s, d) => {
-      val ev = t(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type")
-      val block = ev.where(col("event_type") === "purchase")
-        .groupBy("user_id").agg(count(lit(1)).as("n"))
-        .where(col("n") >= 20).select("user_id")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x112")
-      val ingest = tmp.resolve("ingest").toString
-      ev.repartition(3).write.mode("overwrite").parquet(ingest)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-      // parquet file sink, not memory: surviving events land executor-side
-      // per micro-batch (the r16 memory-sink gate read 37.5× at 100×
-      // purely from driver-side sink cost — SCALE_SMOKE.md post-mortem).
-      val out = tmp.resolve("out").toString
-      val q = graft.streaming.EventStreams
-        .excludeByDim(stream, block, Seq("user_id"))
-        .select("event_id", "user_id", "event_type")
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .format("parquet").option("path", out).start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(out).orderBy("event_id", "user_id", "event_type")
-    },
-    Some("""WITH b AS (
-  SELECT user_id FROM events WHERE event_type = 'purchase'
-  GROUP BY user_id HAVING COUNT(*) >= 20)
-SELECT e.event_id, e.user_id, e.event_type
-FROM events e
-WHERE NOT EXISTS (SELECT 1 FROM b WHERE b.user_id = e.user_id)
-ORDER BY e.event_id, e.user_id, e.event_type"""))
 
   private val x113 = DeclaredQuery("x113_cross_source_dup_matrix",
     // cross-source duplication matrix (Dedup.crossGroupDupMatrix): for
@@ -7831,89 +7366,6 @@ SELECT id_1, id_2,
   FLOOR(c12 * 100 + 0.5) / 100 AS containment_1_in_2,
   FLOOR(c21 * 100 + 0.5) / 100 AS containment_2_in_1
 FROM p WHERE GREATEST(c12, c21) >= 0.9 ORDER BY id_1, id_2"""))
-
-  private val x116 = DeclaredQuery("x116_streaming_full_outer_interval_join",
-    // the FULL_OUTER face completing the streaming interval-join family
-    // (x80 inner, x92 left_outer): every view emits once — paired or
-    // null-padded after its seal — AND every purchase no view can claim
-    // (the attribution hole) emits once with null left columns, after the
-    // watermark proves no impression can still pair with it (its
-    // candidate window is [r_ts − 6h, r_ts], so the right row seals at
-    // its OWN timestamp + the delay). Same x92 sentinel-flush replay on
-    // both streams; oracle is the batch FULL JOIN with the identical
-    // interval condition (user_id coalesced across sides, NULLS FIRST
-    // spelled to match Spark's ASC default).
-    (s, d) => {
-      val ev = t(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type")
-      val span = ev.agg(
-        min(unix_millis(col("ts").cast("timestamp"))).as("lo"),
-        max(unix_millis(col("ts").cast("timestamp"))).as("hi")).head()
-      val (loMs, hiMs) = (span.getLong(0), span.getLong(1))
-      val delayMin = (hiMs - loMs) / 60000 + 60
-      val maxDelayMs = 6L * 3600 * 1000
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x116")
-      val lDir = tmp.resolve("views").toString
-      val rDir = tmp.resolve("purchases").toString
-      ev.where(col("event_type") === "view")
-        .repartition(3).write.mode("overwrite").parquet(lDir)
-      ev.where(col("event_type") === "purchase")
-        .repartition(3).write.mode("overwrite").parquet(rDir)
-      // No maxFilesPerTrigger: the 3+3 initial files land in ONE
-      // micro-batch (x92 keeps the per-file replay face for this family;
-      // here the semantics under test are the two OUTER faces, which are
-      // watermark-driven by the sentinel flushes — per-file batching just
-      // multiplied the fixed micro-batch cost). Each flush round is still
-      // its own batch: the files appear only after processAllAvailable
-      // returns.
-      def rd(p: String): DataFrame = s.readStream.schema(ev.schema)
-        .parquet(p)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val out = tmp.resolve("out").toString
-      // State-store partitions sized to the STREAM, not the session
-      // default: a stream-stream join keeps 4 state stores per partition,
-      // and every micro-batch commits a delta file per store — at 32
-      // session partitions × 4 stores × 5+ batches the gate entry's wall
-      // time was checkpoint I/O, not join work. 8 partitions is still a
-      // real distributed shape ([[withStatePartitions]]).
-      val flushUser = 999999999L
-      def flush(dir: String, tsMs: Long): Unit =
-        s.range(1).select(lit(0L).as("event_id"),
-            timestamp_millis(lit(tsMs)).cast("timestamp_ntz").as("ts"),
-            lit(flushUser).as("user_id"), lit("flush").as("event_type"))
-          .coalesce(1).write.mode("append").parquet(dir)
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
-          .intervalJoin(rd(lDir), rd(rDir), "user_id",
-            maxDelay = "6 hours", watermark = s"$delayMin minutes",
-            joinType = "full_outer")
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .format("parquet").option("path", out).start()
-        try {
-          q.processAllAvailable()
-          val seal1 = hiMs + delayMin * 60000 + maxDelayMs + 3600000L
-          flush(lDir, seal1); flush(rDir, seal1)
-          q.processAllAvailable()
-          flush(lDir, seal1 + 3600000L); flush(rDir, seal1 + 3600000L)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(out).where(col("user_id") =!= flushUser)
-        .select(col("user_id"), col("l_id"), col("r_id"),
-          col("l_ts").cast("timestamp_ntz").as("l_ts"),
-          col("r_ts").cast("timestamp_ntz").as("r_ts"))
-        .orderBy("user_id", "l_id", "r_id")
-    },
-    Some("""SELECT COALESCE(l.user_id, r.user_id) AS user_id,
-       l.event_id AS l_id, r.event_id AS r_id,
-       CAST(l.ts AS TIMESTAMP) AS l_ts, CAST(r.ts AS TIMESTAMP) AS r_ts
-FROM (SELECT * FROM events WHERE event_type = 'view') l
-FULL JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
-  ON l.user_id = r.user_id
- AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 6 HOUR
-ORDER BY user_id, l_id NULLS FIRST, r_id NULLS FIRST"""))
 
   private val x117 = DeclaredQuery("x117_robust_outliers",
     // MAD-based robust outlier flags (Profiling.robustOutliers — Hampel /
@@ -8963,7 +8415,7 @@ ORDER BY tt.pair"""))
     // catch. Oracle is the plain filter: zone pruning is conservative, so
     // the pruned read + exact predicate must be row-identical to it.
     (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x134")
+      val tmp = graft.sources.Scratch.dir("graft-x134")
         .toString
       t(s, d, "documents")
         .repartitionByRange(8, col("n_chars"), col("doc_id"))
@@ -9141,109 +8593,6 @@ SELECT event_type, n, s, var_s,
     ELSE 0.0 END AS z,
   sen_slope
 FROM j ORDER BY event_type"""))
-
-  private val x138 = DeclaredQuery("x138_streaming_cusum",
-    // The x126 CUSUM monitor run ONLINE (EventStreams.cusumMonitor): the
-    // closed form is exactly incrementalizable, so per-key state is four
-    // doubles + the last order key however long the series runs. The
-    // per-type daily series replays in three ORDERED micro-batches
-    // (explicitly PINNED increasing mod-times → file-source order — wall
-    // clocks can land two writes in one millisecond);
-    // every point's statistics are final on emission (Append + parquet
-    // sink), and the oracle is the BATCH closed form — the streaming
-    // recursion must be bit-identical to the window spelling on the same
-    // integer-exact series. Day axis derives from the data's min date.
-    (s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("cnt"))
-      val levels = daily.groupBy("event_type")
-        .agg(sum("cnt").as("__sc"), count(lit(1)).as("__nd"))
-        .select(col("event_type"), expr("__sc div __nd").as("target"))
-        .withColumn("k", greatest(lit(1L), expr("target div 20")))
-        .withColumn("h", col("k") * 5)
-      val mn = daily.agg(min("day").as("__mn"))
-      val series = daily.join(levels, Seq("event_type"))
-        .crossJoin(broadcast(mn))
-        .select(col("event_type").as("key"),
-          datediff(col("day"), col("__mn")).cast("long").as("ord"),
-          col("cnt").cast("double").as("value"),
-          col("target").cast("double").as("target"),
-          col("k").cast("double").as("allow"),
-          col("h").cast("double").as("thresh"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x138")
-      val ingest = tmp.resolve("ingest").toString
-      // The file source orders micro-batches by modification time, and three
-      // sequential writes CAN land in the same millisecond — which would
-      // reorder batches and trip cusumMonitor's out-of-order require (loud
-      // flake). Pin each batch's mtime to an explicit increasing minute so
-      // the replay order is deterministic, not clock-granularity luck.
-      val ingestPath = new org.apache.hadoop.fs.Path(ingest)
-      val ingestFs = ingestPath.getFileSystem(
-        s.sparkContext.hadoopConfiguration)
-      val mtimeBase = 1600000000000L // fixed epoch far below any real clock
-      Seq((0L, 10L), (10L, 20L), (20L, 100000L)).zipWithIndex.foreach {
-        case ((lo, hi), i) =>
-          series.where(col("ord") >= lo && col("ord") < hi)
-            .coalesce(1).write
-            .mode(if (i == 0) "overwrite" else "append").parquet(ingest)
-          ingestFs.listStatus(ingestPath).foreach { f =>
-            if (f.getPath.getName.endsWith(".parquet")
-                && f.getModificationTime > mtimeBase + 180000L)
-              ingestFs.setTimes(f.getPath, mtimeBase + i * 60000L, -1L)
-          }
-      }
-      val stream = s.readStream
-        .schema("key STRING, ord LONG, value DOUBLE, target DOUBLE, " +
-          "allow DOUBLE, thresh DOUBLE")
-        // pinned 2020 mtimes sit ~6y before the clock; disable the 7d
-        // file-age purge so the replay can never depend on it
-        .option("maxFilesPerTrigger", 1).option("maxFileAge", "36500d")
-        .parquet(ingest)
-      val out = tmp.resolve("out").toString
-      // ordered replay face kept; state partitions sized to the stream
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams.cusumMonitor(s, stream)
-          .toDF()
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .format("parquet").option("path", out).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.read.parquet(out).orderBy("key", "ord")
-    },
-    Some("""WITH d AS (
-  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS cnt
-  FROM events GROUP BY 1, 2),
-mn AS (SELECT MIN(day) AS mnd FROM d),
-lv AS (
-  SELECT event_type,
-    CAST(SUM(cnt) // COUNT(*) AS BIGINT) AS target,
-    CAST(GREATEST(1, (SUM(cnt) // COUNT(*)) // 20) AS BIGINT) AS k
-  FROM d GROUP BY 1),
-j AS (
-  SELECT d.event_type AS key, CAST(d.day - mn.mnd AS BIGINT) AS ord,
-    CAST(d.cnt AS DOUBLE) AS value, CAST(lv.target AS DOUBLE) AS t,
-    CAST(lv.k AS DOUBLE) AS kk, CAST(lv.k * 5 AS DOUBLE) AS h
-  FROM d JOIN lv USING (event_type), mn),
-p AS (
-  SELECT *,
-    SUM(value - t - kk) OVER w AS p_up,
-    SUM(t - value - kk) OVER w AS p_dn
-  FROM j
-  WINDOW w AS (PARTITION BY key ORDER BY ord
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-c AS (
-  SELECT *,
-    p_up - LEAST(MIN(p_up) OVER w, 0) AS cusum_up,
-    p_dn - LEAST(MIN(p_dn) OVER w, 0) AS cusum_dn
-  FROM p
-  WINDOW w AS (PARTITION BY key ORDER BY ord
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-SELECT key, ord, value, cusum_up, cusum_dn,
-  cusum_up > h AS alarm_up, cusum_dn > h AS alarm_dn
-FROM c ORDER BY key, ord"""))
 
   private val x139 = DeclaredQuery("x139_benford",
     // Benford first-digit conformance (Forensics.benfordDigits) — the
@@ -9533,7 +8882,7 @@ FROM p ORDER BY pair"""))
     // mis-merged map loses or duplicates rows.
     (s, d) => {
       val docs = t(s, d, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x134b")
+      val tmp = graft.sources.Scratch.dir("graft-x134b")
         .toString
       docs.where(col("doc_id") % 5 =!= 0)
         .repartitionByRange(6, col("n_chars"), col("doc_id"))
@@ -9731,177 +9080,6 @@ acf AS (
 SELECT event_type, lag, n,
   FLOOR(a * 1000000 + 0.5) / 1000000 AS acf
 FROM acf ORDER BY event_type, lag"""))
-
-  private val x146 = DeclaredQuery("x146_streaming_drift_replay",
-    // The x39 PSI drift monitor run AT INGEST TIME (EventStreams
-    // .binnedHistogram): bin edges are the reference slice's exact
-    // quantiles fitted BATCH-side (a model artifact — the x39 recipe),
-    // the current corpus replays as 10-day ingest phases in ordered
-    // micro-batches (pinned mtimes, the x138 recipe), each row bins
-    // map-only against the literal edge fold, and a tumbling-window
-    // streaming count emits each phase's histogram EXACTLY ONCE when the
-    // watermark seals it — state is ≤ 5 bucket rows per open phase,
-    // partial-aggregated map-side. PSI assembly (reference join +
-    // eps-clamped terms, per phase) is batch arithmetic over the k-row
-    // sink. Event time is synthesized as epoch + ord days so the 10-day
-    // tumbling windows ARE the ingest phases; two far-future sentinel
-    // flushes (non-NULL value — the filter pushes below the watermark
-    // node, so a NULL row would not advance event time; their own window
-    // never seals) drive the two-step watermark ratchet. Oracle: the
-    // full batch derivation — QUANTILE_CONT fit, phase histograms, the
-    // x39 eps-clamp/ln spelling — per phase.
-    (s, d) => {
-      val ev = t(s, d, "events").select(col("ts"), col("value"))
-        .where(col("value").isNotNull)
-      val mn = ev.agg(min(to_date(col("ts"))).as("__mn"))
-      val base = ev.crossJoin(broadcast(mn))
-        .select(
-          datediff(to_date(col("ts")), col("__mn")).cast("long").as("ord"),
-          col("value").cast("double").as("value"))
-      val ref = base.where(col("ord") < 10)
-      val edges = graft.operators.Percentiles.exactGlobalValues(
-        ref, "value", Seq(0.2, 0.4, 0.6, 0.8)).flatten
-      def bucketOf(v: org.apache.spark.sql.Column) =
-        edges.foldLeft(lit(1)) { (acc, t) =>
-          acc + when(v >= t, 1).otherwise(0)
-        }
-      val refH = ref.select(bucketOf(col("value")).as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("n_ref"))
-      val cur = base.where(col("ord") >= 10)
-        .select(timestamp_seconds(col("ord") * 86400L).as("ts"),
-          col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-x146")
-      val ingest = tmp.resolve("ingest").toString
-      val ingestPath = new org.apache.hadoop.fs.Path(ingest)
-      val ingestFs = ingestPath.getFileSystem(
-        s.sparkContext.hadoopConfiguration)
-      val mtimeBase = 1600000000000L
-      var batchIdx = 0
-      def pinTimes(): Unit = {
-        ingestFs.listStatus(ingestPath).foreach { f =>
-          if (f.getPath.getName.endsWith(".parquet")
-              && f.getModificationTime > mtimeBase + 600000L)
-            ingestFs.setTimes(f.getPath, mtimeBase + batchIdx * 60000L, -1L)
-        }
-        batchIdx += 1
-      }
-      Seq((10L, 20L), (20L, 100000L)).zipWithIndex.foreach {
-        case ((lo, hi), i) =>
-          cur.where(col("ts") >= timestamp_seconds(lit(lo * 86400L))
-              && col("ts") < timestamp_seconds(lit(hi * 86400L)))
-            .coalesce(1).write
-            .mode(if (i == 0) "overwrite" else "append").parquet(ingest)
-          pinTimes()
-      }
-      // maxFileAge guards the pinned-mtime replay: if the source ever saw
-      // a real-2026 mtime, the default 7d purge would silently ignore the
-      // next file pinned near mtimeBase (2020) — the watermark ratchet
-      // would then hang on no-data-batch timing.
-      val stream = s.readStream.schema("ts TIMESTAMP, value DOUBLE")
-        .option("maxFilesPerTrigger", 1).option("maxFileAge", "36500d")
-        .parquet(ingest)
-      val out = tmp.resolve("out").toString
-      // Sentinel writes race the RUNNING stream: a file landing in the
-      // watched dir with its real clock mtime can be polled before
-      // setTimes re-pins it, poisoning the source's max-seen timestamp.
-      // Stage each sentinel OUTSIDE the watched dir, pin its mtime there,
-      // then rename it in (rename preserves mtime) — the source only ever
-      // observes pinned timestamps.
-      def flush(ordDay: Long): Unit = {
-        val stage = tmp.resolve(s"stage-$ordDay").toString
-        s.range(1).select(
-            timestamp_seconds(lit(ordDay * 86400L)).as("ts"),
-            lit(0.0).as("value"))
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val stagePath = new org.apache.hadoop.fs.Path(stage)
-        ingestFs.listStatus(stagePath).foreach { f =>
-          if (f.getPath.getName.endsWith(".parquet")) {
-            ingestFs.setTimes(f.getPath, mtimeBase + batchIdx * 60000L, -1L)
-            ingestFs.rename(f.getPath,
-              new org.apache.hadoop.fs.Path(ingestPath, f.getPath.getName))
-          }
-        }
-        batchIdx += 1
-      }
-      // state-store partitions sized to the STREAM (the x116 lesson): the
-      // aggregation state is ≤ 5 bucket rows per open phase, so 32 session
-      // partitions × 4 micro-batches of delta commits would be pure
-      // checkpoint I/O ([[withStatePartitions]]).
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
-          .binnedHistogram(stream, "value", edges,
-            window_ = "10 days", watermark = "0 seconds")
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .format("parquet").option("path", out).start()
-        try {
-          q.processAllAvailable()
-          flush(200000L); q.processAllAvailable()
-          flush(200010L); q.processAllAvailable()
-        } finally q.stop()
-      }
-      val got = s.read.parquet(out)
-        .where(col("ws") < timestamp_seconds(lit(100000L * 86400L)))
-        .select((col("ws").cast("long") / 86400L).cast("long").as("phase"),
-          col("bucket"), col("n_cur"))
-      val spine = got.select("phase").distinct()
-        .crossJoin(s.range(1, 6).select(col("id").cast("int").as("bucket")))
-      val wPhase = org.apache.spark.sql.expressions.Window
-        .partitionBy("phase")
-      def clamp(c: org.apache.spark.sql.Column) = greatest(c, lit(1e-6))
-      spine
-        .join(got, Seq("phase", "bucket"), "left")
-        .join(refH, Seq("bucket"), "left")
-        .na.fill(0L, Seq("n_cur", "n_ref"))
-        .withColumn("p_ref",
-          col("n_ref").cast("double") / sum("n_ref").over(wPhase))
-        .withColumn("p_cur",
-          col("n_cur").cast("double") / sum("n_cur").over(wPhase))
-        .select(col("phase"), col("bucket"), col("n_ref"), col("n_cur"),
-          round4(col("p_ref")).as("p_ref"),
-          round4(col("p_cur")).as("p_cur"),
-          round4((clamp(col("p_cur")) - clamp(col("p_ref")))
-            * log(clamp(col("p_cur")) / clamp(col("p_ref"))))
-            .as("psi_term"))
-        .orderBy("phase", "bucket")
-    },
-    Some("""WITH d AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(value AS DOUBLE) AS v
-  FROM events WHERE value IS NOT NULL),
-mn AS (SELECT MIN(day) AS mnd FROM d),
-o AS (SELECT CAST(day - mn.mnd AS BIGINT) AS ord, v FROM d, mn),
-r0 AS (SELECT v FROM o WHERE ord < 10),
-e AS (SELECT QUANTILE_CONT(v, 0.2) AS e1, QUANTILE_CONT(v, 0.4) AS e2,
-             QUANTILE_CONT(v, 0.6) AS e3, QUANTILE_CONT(v, 0.8) AS e4
-      FROM r0),
-rb AS (SELECT 1 + CAST(v >= e1 AS INT) + CAST(v >= e2 AS INT)
-         + CAST(v >= e3 AS INT) + CAST(v >= e4 AS INT) AS bucket
-       FROM r0 CROSS JOIN e),
-rc AS (SELECT bucket, COUNT(*) AS n_ref FROM rb GROUP BY 1),
-cb AS (SELECT ord // 10 * 10 AS phase,
-         1 + CAST(v >= e1 AS INT) + CAST(v >= e2 AS INT)
-         + CAST(v >= e3 AS INT) + CAST(v >= e4 AS INT) AS bucket
-       FROM o CROSS JOIN e WHERE ord >= 10),
-cc AS (SELECT phase, bucket, COUNT(*) AS n_cur FROM cb GROUP BY 1, 2),
-ph AS (SELECT DISTINCT phase FROM cc),
-b AS (SELECT CAST(i AS INT) AS bucket FROM range(1, 6) t(i)),
-sp AS (SELECT phase, bucket FROM ph CROSS JOIN b),
-j AS (SELECT sp.phase, sp.bucket, COALESCE(rc.n_ref, 0) AS n_ref,
-             COALESCE(cc.n_cur, 0) AS n_cur
-      FROM sp LEFT JOIN rc USING (bucket)
-              LEFT JOIN cc USING (phase, bucket)),
-p AS (SELECT *,
-        n_ref * 1.0 / SUM(n_ref) OVER (PARTITION BY phase) AS p_ref,
-        n_cur * 1.0 / SUM(n_cur) OVER (PARTITION BY phase) AS p_cur
-      FROM j)
-SELECT phase, bucket, n_ref, n_cur,
-  FLOOR(p_ref * 10000 + 0.5) / 10000 AS p_ref,
-  FLOOR(p_cur * 10000 + 0.5) / 10000 AS p_cur,
-  FLOOR((GREATEST(p_cur, 1e-6) - GREATEST(p_ref, 1e-6))
-    * LN(GREATEST(p_cur, 1e-6) / GREATEST(p_ref, 1e-6)) * 10000 + 0.5)
-    / 10000 AS psi_term
-FROM p ORDER BY phase, bucket"""))
 
   private val x147 = DeclaredQuery("x147_sequential_mixture_test",
     // Always-valid sequential mean test (Sequential.alwaysValidMeanTest —
@@ -10221,14 +9399,15 @@ FROM u ORDER BY metric"""))
     x5, x5b, x5c, x5d, x6, x6b, x6c, x7, x7b, x7c, x7d, x7e, x7f, x8, x8b, x9, x10, x10b, x11, x12, x12b,
     x13, x13b, x14, x14b, x14c, x15, x6d, x16, x16b, x16c, x17, x17b, x18, x19, x10c,
     x20, x20b, x20c, x20d, x20e, x21, x22, x22b, x23, x23b, x23c, x24, x25, x26, x27, x27b, x28, x29, x29b, x29c, x30, x31, x31c, x32, x32b, x33, x34, x35, x35b, x36, x36b, x36c, x36d, x36e, x36f, x36g, x36h, x37, x38, x38b, x39, x39b, x40, x41, x42, x42b, x42c, x43, x44, x45, x46, x47, x48, x49, x50, x51, x51b, x52, x53, x54, x55, x56, x57, x58, x58b, x59, x59b, x60, x61,
-    x62, x63, x64, x65, x66, x67, x68, x69, x70, x71, x72, x72b, x73, x74,
-    x75, x76, x77, x78, x79, x80, x81, x82, x83, x84, x85, x86, x87, x88,
-    x89, x90, x91, x92, x93, x94, x95, x96, x97, x98, x99, x100, x101,
-    x102, x103, x104, x105, x106, x107, x108, x109, x110, x111, x112,
-    x113, x114, x115, x115b, x116, x117, x118, x119, x120, x121, x122,
+    x62, x63, x64, x65, x66, x67, x69, x70, x71, x72, x72b, x73, x74,
+    x75, x76, x77, x81, x82, x83, x84, x85, x87, x88,
+    x89, x90, x91, x93, x94, x95, x96, x97, x98, x99, x100,
+    x102, x103, x104, x105, x106, x107, x108, x109, x110, x111,
+    x113, x114, x115, x115b, x117, x118, x119, x120, x121, x122,
     x123, x124, x125, x126, x127, x128, x129, x130, x131, x132, x133,
-    x134, x134b, x135, x136, x137, x138, x139, x140, x141, x142, x143,
-    x144, x145, x146, x147, x148, x148b, x149, x150, x10d, x10e, x10f)
+    x134, x134b, x135, x136, x137, x139, x140, x141, x142, x143,
+    x144, x145, x147, x148, x148b, x149, x150, x10d, x10e, x10f) ++
+    graft.queries.StreamingQueries.all
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.run).toMap

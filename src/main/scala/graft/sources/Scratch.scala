@@ -1,0 +1,32 @@
+package graft.sources
+
+import java.io.File
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+/** Scratch dirs for the registry's entries and smokes (staged replay
+  * inputs, checkpoints, sink dirs, round-trip copies, on-disk indexes).
+  * Every dir is deleted recursively by ONE JVM-exit hook. Deletion waits
+  * for exit because an entry returns a lazy frame that still reads its
+  * dir when the caller collects or writes it. */
+object Scratch {
+
+  private val dirs = new ConcurrentLinkedQueue[Path]()
+
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => dirs.forEach(p => rm(p.toFile))))
+
+  private def rm(f: File): Unit = {
+    if (!Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles).foreach(_.foreach(rm))
+    f.delete(): Unit
+  }
+
+  /** A fresh dir under `java.io.tmpdir`, named `<prefix><random>`. */
+  def dir(prefix: String): Path = {
+    exitHook
+    val p = Files.createTempDirectory(prefix)
+    dirs.add(p)
+    p
+  }
+}

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.StreamReplay
 
 /** 10×-scale smoke: the empirical check behind the "designed for 100 TB"
   * claims. Builds a corpus `copies`× the size of a base scale-factor dir by
@@ -182,36 +183,26 @@ object ScaleSmoke {
     // recallAtK composes unchanged — the evaluation stays cheaper than
     // either search
     // stream-static enrichment with a PRODUCTION sink: the x101 gate
-    // entry buffers every enriched row in the driver-side memory sink so
-    // the oracle can hash it — at 100× that is 30M rows on one heap (it
-    // OOM'd the first 100× run of this smoke, recorded in SCALE_SMOKE.md).
-    // Production streams never collect their output; this spelling runs
-    // the identical stream-static join into the noop sink and returns a
-    // 1-row marker, measuring the join itself
+    // entry writes every enriched row to a parquet file sink so the oracle
+    // can hash it (a driver-side memory sink OOM'd the first 100× run,
+    // recorded in SCALE_SMOKE.md). Production streams keep no copy of the
+    // output; this spelling runs the identical stream-static join into the
+    // noop sink and returns a 1-row marker, measuring the join itself
     "streaming_enrich_noop" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, count, lit}
       val ev = graft.sources.Tables.table(s, dir, "events")
         .select("event_id", "ts", "user_id", "event_type")
       val dim = ev.where(col("event_type") === "purchase")
         .groupBy("user_id").agg(count(lit(1)).as("n_purchases"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-senrich-smoke")
-      val ingest = tmp.resolve("ingest").toString
-      ev.repartition(3).write.mode("overwrite").parquet(ingest)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-      val q = graft.streaming.EventStreams
-        .enrichWithDim(stream, dim, Seq("user_id"), "left_outer")
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .format("noop").start()
-      try q.processAllAvailable() finally q.stop()
-      s.range(1).toDF("ok")
+      val replay = StreamReplay(s, "graft-senrich-smoke")
+      replay.parts(ev, 3)
+      replay.run(graft.streaming.EventStreams.enrichWithDim(
+        replay.source(), dim, Seq("user_id"), "left_outer"), StreamReplay.Noop)
     }),
     // the anti face with a production sink (same rationale as
-    // streaming_enrich_noop: the x112 gate entry buffers every surviving
-    // row in the driver-side memory sink for the oracle — at 100× that is
-    // sink cost, not join cost)
+    // streaming_enrich_noop: the x112 gate entry writes every surviving
+    // row to a parquet file sink for the oracle — at 100× that is sink
+    // cost, not join cost)
     "streaming_blocklist_noop" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, count, lit}
       val ev = graft.sources.Tables.table(s, dir, "events")
@@ -219,19 +210,10 @@ object ScaleSmoke {
       val block = ev.where(col("event_type") === "purchase")
         .groupBy("user_id").agg(count(lit(1)).as("n"))
         .where(col("n") >= 20).select("user_id")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-sblock-smoke")
-      val ingest = tmp.resolve("ingest").toString
-      ev.repartition(3).write.mode("overwrite").parquet(ingest)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-      val q = graft.streaming.EventStreams
-        .excludeByDim(stream, block, Seq("user_id"))
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .format("noop").start()
-      try q.processAllAvailable() finally q.stop()
-      s.range(1).toDF("ok")
+      val replay = StreamReplay(s, "graft-sblock-smoke")
+      replay.parts(ev, 3)
+      replay.run(graft.streaming.EventStreams.excludeByDim(
+        replay.source(), block, Seq("user_id")), StreamReplay.Noop)
     }),
     // the q48/q49 shapes UNFILTERED (gate spellings pin o_custkey/c_custkey
     // to a fixed range so the oracle stays cheap; production runs the whole

@@ -2,18 +2,28 @@
 """Local mimic of the driver's correctness gate: read Verify's parquet dumps
 and oracle_sql.json, run each oracle in DuckDB over the same testdata, and
 compare (columns sorted by name, rows in result order). Dev tool only — the
-shipped library has no Python dependency."""
+shipped library has no Python dependency.
+
+Usage: python3 tools/check.py <sf_dir> <out_dir> [name ...]
+Entry names after the two dirs (as Verify takes them) restrict the check to
+those entries; with none, every oracle entry is checked. A named entry with
+no oracle (rows-only, or a typo) is reported as SKIP. The exit code is 1 if
+any checked entry fails."""
 import json, sys, glob
 import duckdb
 
 TABLES = ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, names=()):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if names:
+        for n in sorted(set(names) - set(oracle)):
+            print(f"SKIP {n}: no oracle SQL")
+        oracle = {n: q for n, q in oracle.items() if n in set(names)}
     n_pass = n_fail = 0
     for name in sorted(oracle):
         files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
@@ -58,4 +68,5 @@ def main(sf_dir, out_dir):
 
 if __name__ == "__main__":
     sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001",
-                  sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"))
+                  sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out",
+                  sys.argv[3:]))

@@ -658,12 +658,11 @@ FROM g ORDER BY o_orderkey"""))
     // max(1, ⌈p·n⌉), i.e. the first actual data value whose cumulative
     // fraction reaches p — never interpolated, unlike q37's
     // percentile_cont. Same scale-safe RANGED distributed-sort form as
-    // q37 (composite (group, value) range partition + driver prefix-scan
-    // of per-partition counts — a hot group never lands in one task's
-    // sort); only the target rank and the pick differ. Because the result
-    // is a raw data value with NO arithmetic, the oracle (DuckDB's native
-    // quantile_disc, verified to the same max(1, ⌈p·n⌉) contract) matches
-    // BIT-EXACTLY with no rounding pin.
+    // q37 (a RangeScan keyed by the group — a hot group never lands in
+    // one task's sort); only the target rank and the pick differ. Because
+    // the result is a raw data value with NO arithmetic, the oracle
+    // (DuckDB's native quantile_disc, verified to the same max(1, ⌈p·n⌉)
+    // contract) matches BIT-EXACTLY with no rounding pin.
     (s, d) => graft.operators.Percentiles.discByGroupRanged(
         t(s, d, "lineitem"), "l_returnflag", "l_extendedprice",
         ps = Seq(0.25, 0.5, 0.9), names = Seq("p25", "p50", "p90"))
@@ -910,9 +909,8 @@ ORDER BY c.c_custkey, t.o_orderkey"""
     // buffer — a hot group at 100 TB lands in one executor's heap. THIS
     // shape (3 groups × the whole table) is also exactly where the grouped
     // ranking window degenerates (each group = one task's sort), so the
-    // gate runs the RANGED form: composite (group, value) range partition
-    // splits every group across ~p/3 partitions, ranks rebuilt from
-    // per-(partition, group) offsets. Same h=(n−1)p interpolation as
+    // gate runs the RANGED form: a RangeScan keyed by the group splits
+    // every group across ~p/3 partitions. Same h=(n−1)p interpolation as
     // `percentile` and DuckDB `quantile_cont`; ranged ≡ window form pinned
     // bit-identically in SelectionSpec.
     (s, d) => {
@@ -3239,9 +3237,8 @@ FROM nt LEFT JOIN agg USING (doc_id) ORDER BY nt.doc_id"""))
     // documents by (n_chars DESC, doc_id), keep while the running
     // whitespace-token total fits in 10k tokens. The oracle is the
     // windowed-SQL spelling of the same strict ranking prefix — the operator
-    // computes it with the distributed-scan recipe (range partition +
-    // driver-side subtotal prefix scan + partition-local window) instead of
-    // the single-partition global window the SQL text implies.
+    // computes it with a RangeScan instead of the single-partition global
+    // window the SQL text implies.
     (s, d) => graft.operators.Selection.selectByBudget(
         t(s, d, "documents"), "doc_id", col("n_chars").cast("double"),
         size(split(col("text"), " ")).cast("long"), budget = 10000L)
@@ -3260,7 +3257,7 @@ SELECT doc_id, n_tokens, cum_tokens FROM ranked WHERE cum_tokens <= 10000 ORDER 
     // consuming down the ranking. The sequential recurrence IS ANSI-
     // expressible as an O(n)-deep recursive CTE — quadratic in DuckDB and
     // unusable at production scale (which is why the OPERATOR is the
-    // Jacobi relaxation over the distributed-scan recipe), but exact and
+    // Jacobi relaxation over a RangeScan), but exact and
     // cheap at the 500-doc gate, so the oracle walks the ranking one row
     // per recursion step and the hash match pins the full keep/skip/cum
     // semantics. SelectionSpec additionally pins the driver-side
@@ -5092,9 +5089,8 @@ FROM best GROUP BY lang ORDER BY lang""", minJ = "0.8")))
   private val x63 = DeclaredQuery("x63_token_shards",
     // training-shard assignment: reproducible sha-shuffled order + a
     // token-budget cut every ~5000 chars — each document lands in the
-    // shard where its exclusive prefix starts. The running total is the
-    // distributed-scan recipe (range partition on the shuffle key +
-    // O(partitions) driver prefix), never a single-partition ORDER BY
+    // shard where its exclusive prefix starts. The running total is a
+    // RangeScan on the shuffle key, never a single-partition ORDER BY
     // window; the oracle IS that windowed-SQL spelling, so the hash pins
     // the recipe's equivalence at gate scale.
     (s, d) => graft.operators.Packing.assignTokenShards(
@@ -5684,10 +5680,10 @@ FROM agg"""))
     // waste of 32-row batches under the reproducible shuffled order
     // (x25's sha256 spec) vs length-sorted order — the number that
     // decides whether a length-bucketing sampler is worth its bias. The
-    // global row index is the distributed-scan recipe, never a
-    // single-partition window; the ORACLE is the ROW_NUMBER window
-    // spelling, so the hash match re-proves recipe ≡ window (the x63
-    // contract) on a second construction. Exact integers + one division.
+    // global row index is a RangeScan, never a single-partition window;
+    // the ORACLE is the ROW_NUMBER window spelling, so the hash match
+    // re-proves recipe ≡ window (the x63 contract) on a second
+    // construction. Exact integers + one division.
     (s, d) => graft.operators.Packing.paddingAudit(
         t(s, d, "documents"), "doc_id",
         size(split(col("text"), " ")).cast("long"),
@@ -5797,10 +5793,9 @@ FROM b ORDER BY bin"""))
 
   private val x83 = DeclaredQuery("x83_curriculum_schedule",
     // competence-based curriculum (Curriculum.competenceSchedule,
-    // Platanios NAACL'19): global ascending-difficulty rank via the
-    // distributed-scan recipe (range partition + driver offsets +
-    // partition-local window — never a single-partition global sort,
-    // same shape the x36 family pins), then the closed-form inverse of
+    // Platanios NAACL'19): global ascending-difficulty rank via
+    // a RangeScan (never a single-partition global sort, the same shape
+    // the x36 family pins), then the closed-form inverse of
     // the √-competence schedule per row. Difficulty = n_chars with id
     // tie-breaks; ranks are exact ints and pr/release are fixed IEEE
     // expressions of them (c0 = 0.25 so c0² and 1−c0² are exact
@@ -5964,7 +5959,7 @@ FROM sig ORDER BY doc_id"""))
   private val x87 = DeclaredQuery("x87_corpus_report",
     // the one-call corpus report card (Profiling.corpusReport): the fixed
     // (metric, value) contract a pipeline stamps on every data drop —
-    // volume, exact length quantiles (the distributed-scan recipe, never a
+    // volume, exact length quantiles (a RangeScan, never a
     // single-partition sort), language mix + entropy, exact-dup fraction
     // on the fingerprint normalization, source concentration. Integer-
     // derived metrics are exact; the entropy is a k-term double sum —

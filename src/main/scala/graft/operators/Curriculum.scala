@@ -22,11 +22,9 @@ import org.apache.spark.sql.functions._
   * step T. Everything after the rank is per-row arithmetic, so the whole
   * schedule is ONE range shuffle.
   *
-  * Scale: the global ascending-difficulty rank uses the distributed-scan
-  * recipe ([[Selection.globalRank]]: range partition + O(partitions)
-  * driver offsets + partition-local window) — never a single-partition
-  * global window; ties and NULL difficulties are broken by id (NULLs rank
-  * hardest). The N for the percentile is `max(rank)` read off the
+  * Scale: the global ascending-difficulty rank is [[Selection.globalRank]],
+  * a [[RangeScan]]; ties and NULL difficulties are broken by id (NULLs
+  * rank hardest). The N for the percentile is `max(rank)` read off the
   * checkpoint-pinned rank frame globalRank returns (one narrow pass over
   * (id, rank), no second corpus scan), and the id-keyed join back is the
   * only other shuffle.

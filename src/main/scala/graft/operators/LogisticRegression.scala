@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * computing every gradient component and the loss together; per-partition
   * sums are collected and folded in partition order on the driver, so
   * training is bit-deterministic for a fixed input partitioning (the same
-  * contract as the distributed-scan recipes; exact partition-invariance is
+  * contract as the [[RangeScan]] offsets; exact partition-invariance is
   * impossible for float sums). The learning rate halves whenever a step
   * fails to improve the loss (and the step is retaken from the previous
   * point), so the recorded loss sequence is strictly non-increasing.

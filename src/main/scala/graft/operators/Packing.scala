@@ -1,13 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis
 
 /** Training-sequence preparation: document chunking and sequence packing —
   * the two shaping steps between a cleaned corpus and a pretraining data
-  * loader. Both are deterministic (oracled in the gate) and scale as map-only
-  * passes; packing's only coordination is a constant-size prefix-sum.
+  * loader. Both are deterministic (oracled in the gate); chunking is
+  * map-only and packing's running total is a [[RangeScan]].
   */
 object Packing {
 
@@ -46,63 +47,33 @@ object Packing {
     * Output per document: its global `start_offset` in the token stream and
     * the first/last training bins it touches.
     *
-    * Scale design — a global prefix sum WITHOUT a single-partition window:
-    * range-partition by id, per-partition subtotals (one tiny row per
-    * partition) prefix-scanned on the driver, then a partition-local
-    * cumulative window shifted by the partition's global offset. The only
-    * driver-side data is `partitions` longs; everything else is one range
-    * shuffle + a partition-local sort — the textbook distributed scan. The
-    * result is independent of `partitions` (the offsets compose exactly),
-    * so the partitioning-invariance gate pins it. */
+    * Scale: one [[RangeScan]] on the id, so the result does not depend on
+    * the partition count. */
   def packSequences(df: DataFrame, idCol: String, nTokens: Column,
-                    capacity: Long, partitions: Int = 0): DataFrame = {
+                    capacity: Long): DataFrame = {
     require(capacity > 0, s"capacity must be positive, got $capacity")
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // persisted so the subtotal pass and the final pass see the SAME
-    // partition assignment (range boundaries come from sampling the input;
-    // pinning the frame removes any recomputation hazard). Narrow rows:
-    // (id, count) only. Released once the result is materialized.
     // null-count documents (e.g. null text → null tokenCount) pack as zero
-    // tokens: a null here would shift every later offset to null and NPE the
-    // subtotal collect below
-    val base = df.select(col(idCol),
-        coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"))
-      .repartitionByRange(p, col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // constant-size driver collect: one subtotal per partition, prefix-scanned
-    // into each partition's global starting offset
-    val subtotals = base.groupBy("__pid").agg(sum("n_tokens").as("__t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until p).scanLeft(0L)((acc, i) =>
-      acc + subtotals.getOrElse(i, 0L))
-    val offsetOf = element_at(
-      map(offsets.take(p).zipWithIndex
-        .flatMap { case (o, i) => Seq(lit(i), lit(o)) }: _*),
-      col("__pid"))
+    // tokens: a null here would shift every later offset to null
+    val narrow = df.select(col(idCol),
+      coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"))
     // secondary n_tokens tie-break: with duplicate ids the ROWS frame would
     // otherwise include an arbitrary subset of the tied rows in each prefix —
     // (id, n_tokens) makes the scan deterministic for every input (exact
     // duplicate rows are interchangeable, so their order is immaterial)
-    val w = Window.partitionBy("__pid").orderBy(col(idCol), col("n_tokens"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val out = base
-      .withColumn("start_offset",
-        offsetOf + coalesce(sum("n_tokens").over(w), lit(0L)))
-      .withColumn("bin_first", expr(s"start_offset div ${capacity}L"))
-      .withColumn("bin_last",
-        expr(s"(start_offset + greatest(n_tokens, 1L) - 1L) div ${capacity}L"))
-      .select(col(idCol), col("n_tokens"), col("start_offset"),
-        col("bin_first"), col("bin_last"))
-    CacheOps.materializeAndRelease(out, base)
+    RangeScan(narrow, Nil, Seq(col(idCol)), tieBreak = Seq(col("n_tokens"))) { scan =>
+      val w = scan.window.rowsBetween(Window.unboundedPreceding, -1)
+      scan.frame
+        .withColumn("start_offset", scan.offsets(sum("n_tokens")).column +
+          coalesce(sum("n_tokens").over(w), lit(0L)))
+        .withColumn("bin_first", expr(s"start_offset div ${capacity}L"))
+        .withColumn("bin_last",
+          expr(s"(start_offset + greatest(n_tokens, 1L) - 1L) div ${capacity}L"))
+        .select(col(idCol), col("n_tokens"), col("start_offset"),
+          col("bin_first"), col("bin_last"))
+        .localCheckpoint(true)
+    }
   }
 
-  /** Per-bin packing summary over [[packSequences]]: how many documents START
-    * in each bin and their total tokens — the shape a loader's manifest
-    * needs. Straddling documents count toward the bin they start in. */
   /** SENTENCE-aware chunking — the RAG/eval-construction sibling of the
     * fixed-window [[chunkDocuments]]: split on terminal punctuation
     * (`.!?` + whitespace) and GREEDILY pack consecutive sentences into
@@ -158,46 +129,31 @@ object Packing {
     * budget. Output: (idCol, n_tokens, shard_id); write per-shard files
     * with `.write.partitionBy("shard_id")`.
     *
-    * The running total is the same distributed-scan recipe as
-    * [[packSequences]] (range partition on the SHUFFLE KEY → per-partition
-    * subtotals prefix-scanned on the driver → partition-local window) —
-    * no single-partition global window at any corpus size; NULL token
+    * The running total is a [[RangeScan]] on the shuffle key; NULL token
     * counts fill as zero, matching every budget op here. */
   def assignTokenShards(df: DataFrame, idCol: String, nTokens: Column,
-                        tokensPerShard: Long, salt: String,
-                        partitions: Int = 0): DataFrame = {
+                        tokensPerShard: Long, salt: String): DataFrame = {
     require(tokensPerShard > 0,
       s"tokensPerShard must be positive, got $tokensPerShard")
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val base = df.select(col(idCol),
-        coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"),
-        sha2(concat_ws(":", col(idCol).cast("string"), lit(salt)), 256)
-          .as("__key"))
-      .repartitionByRange(p, col("__key"), col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val subtotals = base.groupBy("__pid").agg(sum("n_tokens").as("__t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until p).scanLeft(0L)((acc, i) =>
-      acc + subtotals.getOrElse(i, 0L))
-    val offsetOf = element_at(
-      map(offsets.take(p).zipWithIndex
-        .flatMap { case (o, i) => Seq(lit(i), lit(o)) }: _*),
-      col("__pid"))
-    val w = Window.partitionBy("__pid").orderBy(col("__key"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = base
-      .withColumn("__cum", offsetOf + sum("n_tokens").over(w))
-      .withColumn("shard_id",
-        floor((col("__cum") - col("n_tokens")).cast("double")
-          / tokensPerShard).cast("long"))
-      .select(col(idCol), col("n_tokens"), col("shard_id"))
-    CacheOps.materializeAndRelease(out, base)
+    val narrow = df.select(col(idCol),
+      coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"),
+      shuffleKey(idCol, salt).as("__key"))
+    RangeScan(narrow, Nil, Seq(col("__key"), col(idCol))) { scan =>
+      val w = scan.window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      scan.frame
+        .withColumn("__cum",
+          scan.offsets(sum("n_tokens")).column + sum("n_tokens").over(w))
+        .withColumn("shard_id",
+          floor((col("__cum") - col("n_tokens")).cast("double")
+            / tokensPerShard).cast("long"))
+        .select(col(idCol), col("n_tokens"), col("shard_id"))
+        .localCheckpoint(true)
+    }
   }
 
+  /** Per-bin packing summary over [[packSequences]]: how many documents START
+    * in each bin and their total tokens — the shape a loader's manifest
+    * needs. Straddling documents count toward the bin they start in. */
   def packSummary(assignment: DataFrame): DataFrame =
     assignment.groupBy(col("bin_first").as("bin"))
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("total_tokens"))
@@ -216,54 +172,39 @@ object Packing {
     * exact integers and one division, so fully oracle-able against the
     * ROW_NUMBER window spelling.
     *
-    * Shape: the global row index is the distributed-scan recipe (range
-    * partition on the order key → per-partition COUNTS prefix-scanned on
-    * the driver → partition-local row_number + offset — O(partitions)
-    * driver longs, never a single-partition window), once per ordering;
-    * everything after is a batch-keyed partial aggregate. */
+    * Shape: the global row index is a [[RangeScan]] row count on the order
+    * key, once per ordering; everything after is a batch-keyed partial
+    * aggregate. */
   def paddingAudit(df: DataFrame, idCol: String, nTokens: Column,
-                   batchSize: Int, salt: String,
-                   partitions: Int = 0): DataFrame = {
+                   batchSize: Int, salt: String): DataFrame = {
     require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val narrow = df.select(col(idCol),
       coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"))
-    def audit(name: String, orderKey: Column): DataFrame = {
-      val base = narrow
-        .select(col(idCol), col("n_tokens"), orderKey.as("__key"))
-        .repartitionByRange(p, col("__key"), col(idCol))
-        .withColumn("__pid", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val counts = base.groupBy("__pid").agg(count(lit(1)).as("__c"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val offsets = (0 until p).scanLeft(0L)((acc, i) =>
-        acc + counts.getOrElse(i, 0L))
-      val offsetOf = element_at(
-        map(offsets.take(p).zipWithIndex
-          .flatMap { case (o, i) => Seq(lit(i), lit(o)) }: _*),
-        col("__pid"))
-      val w = Window.partitionBy("__pid").orderBy(col("__key"), col(idCol))
-      val out = base
-        .withColumn("__b",
-          floor((offsetOf + row_number().over(w) - 1).cast("double")
-            / batchSize).cast("long"))
-        .groupBy("__b")
-        .agg(max("n_tokens").as("__mx"), count(lit(1)).as("__c"),
-          sum("n_tokens").as("__s"))
-        .agg(count(lit(1)).as("n_batches"),
-          sum("__s").as("total_tokens"),
-          sum(col("__mx") * col("__c")).as("padded_tokens"))
-        .select(lit(name).as("ordering"), col("n_batches"),
-          col("total_tokens"), col("padded_tokens"),
-          (lit(1.0) - col("total_tokens").cast("double")
-            / col("padded_tokens").cast("double")).as("waste_ratio"))
-      CacheOps.materializeAndRelease(out, base)
-    }
-    audit("shuffled",
-        sha2(concat_ws(":", col(idCol).cast("string"), lit(salt)), 256))
+    def audit(name: String, orderKey: Column): DataFrame =
+      RangeScan(narrow.select(col(idCol), col("n_tokens"), orderKey.as("__key")),
+          Nil, Seq(col("__key"), col(idCol))) { scan =>
+        scan.frame
+          .withColumn("__b",
+            floor((scan.offsets(count(lit(1))).column +
+              row_number().over(scan.window) - 1).cast("double")
+              / batchSize).cast("long"))
+          .groupBy("__b")
+          .agg(max("n_tokens").as("__mx"), count(lit(1)).as("__c"),
+            sum("n_tokens").as("__s"))
+          .agg(count(lit(1)).as("n_batches"),
+            sum("__s").as("total_tokens"),
+            sum(col("__mx") * col("__c")).as("padded_tokens"))
+          .select(lit(name).as("ordering"), col("n_batches"),
+            col("total_tokens"), col("padded_tokens"),
+            (lit(1.0) - col("total_tokens").cast("double")
+              / col("padded_tokens").cast("double")).as("waste_ratio"))
+          .localCheckpoint(true)
+      }
+    audit("shuffled", shuffleKey(idCol, salt))
       .unionByName(audit("sorted", col("n_tokens")))
   }
+
+  /** The sha256(id:salt) epoch order of [[Sampling.deterministicShuffle]]. */
+  private def shuffleKey(idCol: String, salt: String): Column =
+    sha2(concat_ws(":", col(idCol).cast("string"), lit(salt)), 256)
 }

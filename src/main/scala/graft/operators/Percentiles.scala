@@ -71,14 +71,12 @@ object Percentiles {
     * grouped ranking window degenerates: `Window.partitionBy(group)` puts
     * each group's ENTIRE value set into one task's sort, so three groups
     * over a 100 TB table are three hot partitions no matter the cluster
-    * size. Here the composite `repartitionByRange(group, value)` splits
-    * every group ACROSS ~p/|groups| partitions (same recipe as
-    * [[exactGlobalValuesMulti]], keyed by the group VALUE instead of a
-    * column index), per-(partition, group) counts are prefix-scanned on the
-    * driver, and global in-group rank = offset + partition-local
-    * `row_number`. Driver state is |partitions|·|groups| longs plus
-    * 2·|ps|·|groups| neighbor values — which is why this variant REQUIRES a
-    * bounded group count (`maxGroups` guard): with many groups use
+    * size. Here a [[RangeScan]] keyed by the group splits every group
+    * ACROSS ~p/|groups| partitions, and the global in-group rank is its
+    * offset + the partition-local `row_number`. Driver state is
+    * |partitions|·|groups| longs plus 2·|ps|·|groups| neighbor values —
+    * which is why this variant REQUIRES a bounded group count
+    * (`maxGroups` guard): with many groups use
     * [[exactByGroup]], whose window distributes fine when groups are small.
     *
     * Returns the same frame shape as [[exactByGroup]] (one row per group,
@@ -87,9 +85,8 @@ object Percentiles {
     * forms are differentially pinned in the spec. */
   def exactByGroupRanged(df: DataFrame, groupCol: String, valueCol: String,
                          ps: Seq[Double], names: Seq[String],
-                         partitions: Int = 0, maxGroups: Int = 10000): DataFrame =
-    byGroupRangedCore(df, groupCol, valueCol, ps, names, partitions,
-      maxGroups)(
+                         maxGroups: Int = 10000): DataFrame =
+    byGroupRangedCore(df, groupCol, valueCol, ps, names, maxGroups)(
       targetRanks = { (q, n) =>
         val h = (n - 1).toDouble * q
         Seq(math.floor(h).toLong + 1, math.ceil(h).toLong + 1)
@@ -110,183 +107,124 @@ object Percentiles {
     * differ. */
   def discByGroupRanged(df: DataFrame, groupCol: String, valueCol: String,
                         ps: Seq[Double], names: Seq[String],
-                        partitions: Int = 0, maxGroups: Int = 10000): DataFrame =
-    byGroupRangedCore(df, groupCol, valueCol, ps, names, partitions,
-      maxGroups)(
+                        maxGroups: Int = 10000): DataFrame =
+    byGroupRangedCore(df, groupCol, valueCol, ps, names, maxGroups)(
       targetRanks = { (q, n) => Seq(math.max(1L, math.ceil(q * n).toLong)) },
       pick = { (q, n, at) => at(math.max(1L, math.ceil(q * n).toLong)) })
 
   /** Shared ranged-rank core of [[exactByGroupRanged]] /
-    * [[discByGroupRanged]]: composite (group, value) range partition,
-    * driver prefix-scan of per-(partition, group) counts, global in-group
-    * rank = offset + partition-local row_number, then fit each quantile
-    * from `targetRanks`' collected values via `pick`. */
+    * [[discByGroupRanged]]: in-group ranks from a [[RangeScan]] keyed by
+    * the group, then fit each quantile from `targetRanks`' collected values
+    * via `pick`. */
   private def byGroupRangedCore(df: DataFrame, groupCol: String,
                                 valueCol: String, ps: Seq[Double],
-                                names: Seq[String], partitions: Int,
-                                maxGroups: Int)(
+                                names: Seq[String], maxGroups: Int)(
       targetRanks: (Double, Long) => Seq[Long],
       pick: (Double, Long, Map[Long, Double]) => Double): DataFrame = {
     require(ps.nonEmpty && ps.size == names.size, "ps and names must align")
     require(ps.forall(p => p >= 0.0 && p <= 1.0), "percentiles must be in [0,1]")
     val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val base = df
+    val narrow = df
       .select(col(groupCol).cast("string").as("__g"),
         col(valueCol).cast("double").as("__v"))
       // NULL groups are excluded from the fit and re-attach with NULL
       // percentiles — observably identical to exactByGroup, whose final
       // re-attach join also never matches a NULL key
       .where(col("__v").isNotNull && col("__g").isNotNull)
-      .repartitionByRange(p, col("__g"), col("__v"))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts = base.groupBy("__pid", "__g").agg(count(lit(1)).as("__c"))
-        .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
-      val groups = counts.keysIterator.map(_._2).toSeq.distinct.sorted
-      require(groups.size <= maxGroups,
-        s"${groups.size} groups exceed maxGroups=$maxGroups — use exactByGroup, " +
-          "whose per-group window distributes when group count is large")
-      val nByG: Map[String, Long] =
-        counts.groupBy(_._1._2).map { case (g, m) => g -> m.values.sum }
-      val offsetMap: Map[(Int, String), Long] = groups.flatMap { g =>
-        var acc = 0L
-        (0 until p).flatMap { pid =>
-          counts.get((pid, g)).map { c =>
-            val e = (pid, g) -> acc; acc += c; e
+    val fitted: Seq[(String, Seq[java.lang.Double])] =
+      RangeScan(narrow, Seq("__g"), Seq(col("__v"))) { scan =>
+        val offsets = scan.offsets(count(lit(1)))
+        val nByG: Map[String, Long] =
+          offsets.totals.map { case (g, n) => g.head.asInstanceOf[String] -> n }
+        val groups = nByG.keys.toSeq.sorted
+        require(groups.size <= maxGroups,
+          s"${groups.size} groups exceed maxGroups=$maxGroups — use exactByGroup, " +
+            "whose per-group window distributes when group count is large")
+        val targetsByG: Map[String, Seq[Long]] = nByG.map { case (g, n) =>
+          g -> ps.flatMap(q => targetRanks(q, n)).distinct
+        }
+        val at =
+          if (nByG.isEmpty) Map.empty[(String, Long), Double]
+          else scan.frame
+            .withColumn("__rn", offsets.column + row_number().over(scan.window))
+            .where(targetsByG.map { case (g, ts) =>
+              col("__g") === g && col("__rn").isin(ts: _*)
+            }.reduce(_ || _))
+            .select(col("__g"), col("__rn"), col("__v"))
+            .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        val atByG: Map[String, Map[Long, Double]] =
+          at.groupBy(_._1._1).map { case (g, m) =>
+            g -> m.map { case ((_, rn), v) => rn -> v }
           }
+        groups.map { g =>
+          val n = nByG(g)
+          val atG = atByG.getOrElse(g, Map.empty[Long, Double])
+          g -> ps.map(q => java.lang.Double.valueOf(pick(q, n, atG)))
         }
-      }.toMap
-      val offsetOf = element_at(
-        map(offsetMap.toSeq.flatMap { case ((pid, g), o) =>
-          Seq(concat_ws("\u0000", lit(pid), lit(g)), lit(o))
-        }: _*),
-        concat_ws("\u0000", col("__pid"), col("__g")))
-      val w = Window.partitionBy("__pid", "__g").orderBy("__v")
-      val targetsByG: Map[String, Seq[Long]] = nByG.map { case (g, n) =>
-        g -> ps.flatMap(q => targetRanks(q, n)).distinct
       }
-      val at = base
-        .withColumn("__rn", offsetOf + row_number().over(w))
-        .where(targetsByG.map { case (g, ts) =>
-          col("__g") === g && col("__rn").isin(ts: _*)
-        }.reduce(_ || _))
-        .select(col("__g"), col("__rn"), col("__v"))
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      val atByG: Map[String, Map[Long, Double]] =
-        at.groupBy(_._1._1).map { case (g, m) =>
-          g -> m.map { case ((_, rn), v) => rn -> v }
-        }
-      val fitted: Seq[(String, Seq[java.lang.Double])] = groups.map { g =>
-        val n = nByG(g)
-        val atG = atByG.getOrElse(g, Map.empty[Long, Double])
-        g -> ps.map(q => java.lang.Double.valueOf(pick(q, n, atG)))
-      }
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types._
-      val schema = StructType(
-        StructField("__g", StringType) +:
-          names.map(n => StructField(n, DoubleType)))
-      val artifact = spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(
-            fitted.map { case (g, vs) => Row.fromSeq(g +: vs) }).asJava),
-        schema)
-      // re-attach every input group (all-NULL groups keep NULL percentiles,
-      // matching exactByGroup / percentile() / QUANTILE_CONT)
-      df.select(col(groupCol)).distinct()
-        .join(artifact, col(groupCol).cast("string") === col("__g"), "left")
-        .select(col(groupCol) +: names.map(col): _*)
-    } finally base.unpersist()
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(
+      StructField("__g", StringType) +:
+        names.map(n => StructField(n, DoubleType)))
+    val artifact = spark.createDataFrame(
+      new java.util.ArrayList[Row](
+        scala.jdk.CollectionConverters.SeqHasAsJava(
+          fitted.map { case (g, vs) => Row.fromSeq(g +: vs) }).asJava),
+      schema)
+    // re-attach every input group (all-NULL groups keep NULL percentiles,
+    // matching exactByGroup / percentile() / QUANTILE_CONT)
+    df.select(col(groupCol)).distinct()
+      .join(artifact, col(groupCol).cast("string") === col("__g"), "left")
+      .select(col(groupCol) +: names.map(col): _*)
   }
 
   /** Exact GLOBAL quantiles of one column — the no-group-key case that
     * [[exactByGroup]] cannot serve at scale (a constant group key turns its
     * ranking window into ONE partition holding the whole column).
     *
-    * Scale design — the same distributed-scan recipe as
-    * [[Packing.packSequences]]: `repartitionByRange` on the value (range
-    * partition i holds values ≤ range partition i+1, so partition ids follow
-    * the global order), per-partition COUNTS prefix-scanned on the driver
-    * (one long per partition), then global rank = partition offset +
-    * partition-LOCAL `row_number`. The only single-point data is `partitions`
-    * longs plus the ≤ 2·|ps| neighbor values collected at the end — every
-    * sort is partition-local and spillable, so the pass survives any column
-    * size. Interpolation is the identical `(1−d)·lower + d·higher` at
-    * `h = (n−1)·p` as [[exactByGroup]], `percentile()` and DuckDB's
-    * `QUANTILE_CONT`.
+    * Scale: the global rank is a [[RangeScan]] row count on the value plus
+    * the partition-local `row_number`; only the ≤ 2·|ps| neighbor values
+    * come back to the driver. Interpolation is the identical
+    * `(1−d)·lower + d·higher` at `h = (n−1)·p` as [[exactByGroup]],
+    * `percentile()` and DuckDB's `QUANTILE_CONT`.
     *
     * Returns one value per requested quantile, driver-side (quantiles are
     * model artifacts, like [[Profiling.standardize]]'s μ/σ); `None` when the
     * column has no non-NULL values. NULLs are ignored, as everywhere.
     */
-  def exactGlobalValues(df: DataFrame, valueCol: String, ps: Seq[Double],
-                        partitions: Int = 0): Seq[Option[Double]] =
-    exactGlobalValuesMulti(df, Seq(valueCol), ps, partitions)(valueCol)
+  def exactGlobalValues(df: DataFrame, valueCol: String,
+                        ps: Seq[Double]): Seq[Option[Double]] =
+    exactGlobalValuesMulti(df, Seq(valueCol), ps)(valueCol)
 
   /** [[exactGlobalValues]] for SEVERAL columns in ONE input scan — the
     * multi-column fit [[Profiling.robustScale]] needs (a per-column loop
     * re-executes the whole upstream plan per column).
     *
     * Recipe: melt to narrow (column-index, value) pairs with `posexplode`,
-    * then `repartitionByRange` on the COMPOSITE key (index, value) — the
-    * leading index groups each column's values into a contiguous span of
-    * range partitions while the trailing value still splits every column
-    * ACROSS ~p/|cols| partitions, so no column ever lands in one partition
-    * (the failure mode that rules out a melt through [[exactByGroup]], whose
-    * per-group ranking window is one partition per column). A range boundary
-    * may straddle two columns, so counts/offsets are keyed by
-    * (partition, column). Driver-side state: |partitions|·|cols| longs plus
-    * the ≤ 2·|ps|·|cols| neighbor values — model artifacts, not data.
+    * then a [[RangeScan]] keyed by the column index, which splits every
+    * column ACROSS ~p/|cols| partitions, so no column ever lands in one
+    * partition (the failure mode that rules out a melt through
+    * [[exactByGroup]], whose per-group ranking window is one partition per
+    * column). Driver-side state: |partitions|·|cols| longs plus the
+    * ≤ 2·|ps|·|cols| neighbor values — model artifacts, not data.
     *
     * Returns quantiles keyed by column name; a column with no non-NULL
     * values maps to all-`None`. Interpolation is the identical
     * `(1−d)·lower + d·higher` at `h = (n−1)·p` as everywhere here. */
   def exactGlobalValuesMulti(df: DataFrame, valueCols: Seq[String],
-                             ps: Seq[Double], partitions: Int = 0)
-      : Map[String, Seq[Option[Double]]] = {
+                             ps: Seq[Double]): Map[String, Seq[Option[Double]]] = {
     require(ps.nonEmpty, "ps must be non-empty")
     require(valueCols.nonEmpty, "valueCols must be non-empty")
     require(ps.forall(p => p >= 0.0 && p <= 1.0), "percentiles must be in [0,1]")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val c = valueCols.size
-    // persisted so the count pass and the rank pass see the SAME range
-    // boundaries (they come from sampling the input) — narrow (int, double)
-    val base = df
+    val narrow = df
       .select(posexplode(array(valueCols.map(cn => col(cn).cast("double")): _*))
         .as(Seq("__ci", "__v")))
       .where(col("__v").isNotNull)
-      .repartitionByRange(p, col("__ci"), col("__v"))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts = base.groupBy("__pid", "__ci").agg(count(lit(1)).as("__c"))
-        .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+    RangeScan(narrow, Seq("__ci"), Seq(col("__v"))) { scan =>
+      val offsets = scan.offsets(count(lit(1)))
       val nByCol: Map[Int, Long] =
-        counts.groupBy(_._1._2).map { case (ci, m) => ci -> m.values.sum }
-      if (counts.isEmpty)
-        return valueCols.map(_ -> ps.map(_ => None)).toMap
-      // per-(partition, column) global-rank offsets: scan partitions in id
-      // order independently per column (partition ids follow value order
-      // within each column's contiguous partition span)
-      val offsetMap: Map[(Int, Int), Long] = (0 until c).flatMap { ci =>
-        var acc = 0L
-        (0 until p).flatMap { pid =>
-          counts.get((pid, ci)).map { cnt =>
-            val entry = (pid, ci) -> acc; acc += cnt; entry
-          }
-        }
-      }.toMap
-      val offsetOf = element_at(
-        map(offsetMap.toSeq.flatMap { case ((pid, ci), o) =>
-          Seq(lit(pid.toLong * c + ci), lit(o))
-        }: _*),
-        col("__pid").cast("long") * c + col("__ci"))
-      val w = Window.partitionBy("__pid", "__ci").orderBy("__v")
+        offsets.totals.map { case (ci, n) => ci.head.asInstanceOf[Int] -> n }
       val targetsByCol: Map[Int, Seq[Long]] = nByCol.map { case (ci, n) =>
         ci -> ps.flatMap { q =>
           val h = (n - 1).toDouble * q
@@ -294,13 +232,15 @@ object Percentiles {
         }.distinct
       }
       // ≤ 2·|ps|·|cols| rows back to the driver — a model artifact, not data
-      val at = base
-        .withColumn("__rn", offsetOf + row_number().over(w))
-        .where(targetsByCol.map { case (ci, ts) =>
-          col("__ci") === ci && col("__rn").isin(ts: _*)
-        }.reduce(_ || _))
-        .select(col("__ci"), col("__rn"), col("__v"))
-        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val at =
+        if (nByCol.isEmpty) Map.empty[(Int, Long), Double]
+        else scan.frame
+          .withColumn("__rn", offsets.column + row_number().over(scan.window))
+          .where(targetsByCol.map { case (ci, ts) =>
+            col("__ci") === ci && col("__rn").isin(ts: _*)
+          }.reduce(_ || _))
+          .select(col("__ci"), col("__rn"), col("__v"))
+          .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(2)).toMap
       valueCols.zipWithIndex.map { case (cn, ci) =>
         cn -> (nByCol.get(ci) match {
           case None => ps.map(_ => None)
@@ -313,6 +253,6 @@ object Percentiles {
           }
         })
       }.toMap
-    } finally base.unpersist()
+    }
   }
 }

@@ -549,7 +549,7 @@ object Profiling {
     *
     * Metrics: `n_docs`, `total_tokens`, `mean_doc_tokens`,
     * `p50_doc_tokens` / `p90_doc_tokens` (EXACT corpus-wide quantiles via
-    * [[Percentiles.exactGlobalValues]]'s distributed-scan recipe — never a
+    * [[Percentiles.exactGlobalValues]], a [[RangeScan]] — never a
     * single-partition sort), `total_chars`, `mean_doc_chars`, `n_langs`,
     * `lang_entropy_nats` (Shannon entropy of the language mix, folded
     * driver-side over the ≤K language counts in sorted-key order — a fixed
@@ -693,8 +693,8 @@ object Profiling {
     * Iglewicz–Hoaglin recommendation).
     *
     * Shape: TWO passes of the distributed exact-median recipe
-    * ([[Percentiles.exactByGroupRanged]] — range partition + O(partitions)
-    * driver prefix scan, never a per-group single-task sort) + broadcast
+    * ([[Percentiles.exactByGroupRanged]], a [[RangeScan]] — never a
+    * per-group single-task sort) + broadcast
     * joins of the |groups|-row median artifacts; the flagging itself is
     * map-only. A constant group (MAD 0) yields NULL robust_z and a false
     * flag for every member except exact-median breakers — degenerate

@@ -18,11 +18,8 @@ import graft.plans.HashExpressions.native
   *
   * Both are deterministic (score ties broken by id) and both avoid the
   * single-partition global window that a naive `SUM(...) OVER (ORDER BY …)`
-  * spelling costs: the running total uses the distributed-scan recipe
-  * (range partition → per-partition subtotals prefix-scanned on the driver →
-  * partition-local cumulative window), and the rank cut fits its threshold
-  * with [[Percentiles.exactGlobalValues]]'s range-sort. Driver-side state is
-  * O(partitions) longs / O(1) doubles — model artifacts, not data.
+  * spelling costs: the running total is a [[RangeScan]], and the rank cut
+  * fits its threshold with [[Percentiles.exactGlobalValues]].
   *
   * Reference scope note: the reference engine (operators.py:80) delegates
   * all transformation to Postgres and has no curation surface; this
@@ -47,43 +44,23 @@ object Selection {
     * filling with later ones, use [[selectByBudgetSkipGreedy]].
     *
     * NULL handling: a NULL score sorts last (after every real score); NULL
-    * token counts fill as zero — both keep the scan total-ordered and
-    * NULL-free so offsets compose exactly ([[Packing.packSequences]]'s
-    * argument).
+    * token counts fill as zero.
     *
-    * Scale: one range shuffle on (score, id) + a partition-local sort; the
-    * driver sees `partitions` subtotal longs. No global single-partition
-    * window at any corpus size. */
+    * Scale: one [[RangeScan]] on (score, id). */
   def selectByBudget(df: DataFrame, idCol: String, scoreCol: Column,
-                     nTokens: Column, budget: Long,
-                     partitions: Int = 0): DataFrame = {
+                     nTokens: Column, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // pinned frame: the subtotal pass and the rank pass must see the SAME
-    // sampled range boundaries. Narrow rows: (id, score, count).
-    val base = df.select(col(idCol), scoreCol.as("__s"),
-        coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"))
-      .repartitionByRange(p, col("__s").desc_nulls_last, col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val subtotals = base.groupBy("__pid").agg(sum("n_tokens").as("__t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until p).scanLeft(0L)((acc, i) =>
-      acc + subtotals.getOrElse(i, 0L))
-    val offsetOf = element_at(
-      map(offsets.take(p).zipWithIndex
-        .flatMap { case (o, i) => Seq(lit(i), lit(o)) }: _*),
-      col("__pid"))
-    val w = Window.partitionBy("__pid")
-      .orderBy(col("__s").desc_nulls_last, col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = base
-      .withColumn("cum_tokens", offsetOf + sum("n_tokens").over(w))
-      .where(col("cum_tokens") <= budget)
-      .select(col(idCol), col("n_tokens"), col("cum_tokens"))
-    CacheOps.materializeAndRelease(out, base)
+    val narrow = df.select(col(idCol), scoreCol.as("__s"),
+      coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"))
+    RangeScan(narrow, Nil, Seq(col("__s").desc_nulls_last, col(idCol))) { scan =>
+      val w = scan.window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      scan.frame
+        .withColumn("cum_tokens",
+          scan.offsets(sum("n_tokens")).column + sum("n_tokens").over(w))
+        .where(col("cum_tokens") <= budget)
+        .select(col(idCol), col("n_tokens"), col("cum_tokens"))
+        .localCheckpoint(true)
+    }
   }
 
   /** Per-GROUP prefix-truncation budget fill — "every source/domain gets its
@@ -97,8 +74,8 @@ object Selection {
     * n_tokens, cum_tokens) with `cum_tokens` group-local.
     *
     * Unlike the GLOBAL fill — where the ORDER BY spelling would funnel the
-    * corpus through one partition and [[selectByBudget]] must rebuild the
-    * running total from per-partition subtotals — the grouped window
+    * corpus through one partition and [[selectByBudget]] needs a
+    * [[RangeScan]] — the grouped window
     * distributes by `groupCol` on its own, so this is ONE hash shuffle +
     * per-group sorts, the plan Spark already does well WHEN groups are
     * many. The degenerate regime — a handful of corpus-sized groups, where
@@ -188,11 +165,9 @@ object Selection {
     * i, the next pass decides row i (and every earlier row) correctly — so
     * the agreement prefix grows monotonically and the iteration converges
     * exactly, in practice within a handful of passes (one per "skip event"
-    * region, and skips cluster near the budget boundary). Each pass is the
-    * same distributed-scan recipe as [[selectByBudget]] (per-partition
-    * kept-token subtotals prefix-scanned on the driver + a partition-local
-    * window) — no global single-partition window, driver state
-    * O(partitions) longs. Convergence is detected by kept-set signature
+    * region, and skips cluster near the budget boundary). Each pass is one
+    * [[RangeScan]] offset of the kept tokens over the same range-partitioned
+    * frame. Convergence is detected by kept-set signature
     * (count, token sum, id-hash XOR); `maxPasses` bounds the adversarial
     * worst case (alternating oversize/undersize documents) and overrunning
     * it throws rather than returning a non-greedy set.
@@ -201,73 +176,56 @@ object Selection {
     * token counts fill as zero. */
   def selectByBudgetSkipGreedy(df: DataFrame, idCol: String, scoreCol: Column,
                                nTokens: Column, budget: Long,
-                               partitions: Int = 0,
                                maxPasses: Int = 32): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     require(maxPasses > 0, s"maxPasses must be positive, got $maxPasses")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-            else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val order = Seq(col("__s").desc_nulls_last, col(idCol).asc)
-    var cur = df.select(col(idCol), scoreCol.as("__s"),
-        coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"))
-      .repartitionByRange(p, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__sb", lit(0L))
-      .withColumn("__keep", lit(true))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val w = Window.partitionBy("__pid").orderBy(order: _*)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    val narrow = df.select(col(idCol), scoreCol.as("__s"),
+      coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"))
+    RangeScan(narrow, Nil, Seq(col("__s").desc_nulls_last, col(idCol).asc)) { scan =>
+      val w = scan.window.rowsBetween(Window.unboundedPreceding, -1)
       val keptTok = when(col("__keep"), col("n_tokens")).otherwise(0L)
-      var sig: (Long, Long, Long) = (-1L, -1L, -1L)
-      var converged = false
-      var pass = 0
-      while (!converged && pass < maxPasses) {
-        pass += 1
-        val subtotals = cur.groupBy("__pid").agg(sum(keptTok).as("__t"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        if (subtotals.isEmpty) converged = true // empty input: nothing to fill
-        else {
-          val offsets = (0 until p).scanLeft(0L)((acc, i) =>
-            acc + subtotals.getOrElse(i, 0L))
-          val offsetOf = element_at(
-            map(offsets.take(p).zipWithIndex
-              .flatMap { case (o, i) => Seq(lit(i), lit(o)) }: _*),
-            col("__pid"))
-          val next = cur
-            .withColumn("__sb2",
-              offsetOf + coalesce(sum(keptTok).over(w), lit(0L)))
-            .withColumn("__keep", col("__sb2") + col("n_tokens") <= budget)
-            .select(col(idCol), col("__s"), col("n_tokens"), col("__pid"),
-              col("__sb2").as("__sb"), col("__keep"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val sr = next.agg(
-            sum(when(col("__keep"), 1L).otherwise(0L)).as("c"),
-            sum(keptTok).as("t"),
-            // XOR-fold of id hashes: order-independent set signature with no
-            // overflow (a SUM of 64-bit hashes trips ANSI long overflow)
-            bit_xor(when(col("__keep"), xxhash64(col(idCol).cast("string")))
-              .otherwise(0L)).as("h")).head()
-          val newSig = (sr.getLong(0), sr.getLong(1), sr.getLong(2))
-          cur.unpersist(false)
-          cur = next
-          converged = newSig == sig
-          sig = newSig
+      var cur = scan.frame.withColumn("__sb", lit(0L)).withColumn("__keep", lit(true))
+      try {
+        var sig: (Long, Long, Long) = (-1L, -1L, -1L)
+        var converged = false
+        var pass = 0
+        while (!converged && pass < maxPasses) {
+          pass += 1
+          val offsets = scan.offsets(sum(keptTok), cur)
+          if (offsets.totals.isEmpty) converged = true // empty input: nothing to fill
+          else {
+            val next = cur
+              .withColumn("__sb2",
+                offsets.column + coalesce(sum(keptTok).over(w), lit(0L)))
+              .withColumn("__keep", col("__sb2") + col("n_tokens") <= budget)
+              .select(col(idCol), col("__s"), col("n_tokens"), col("__pid"),
+                col("__sb2").as("__sb"), col("__keep"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            val sr = next.agg(
+              sum(when(col("__keep"), 1L).otherwise(0L)).as("c"),
+              sum(keptTok).as("t"),
+              // XOR-fold of id hashes: order-independent set signature with no
+              // overflow (a SUM of 64-bit hashes trips ANSI long overflow)
+              bit_xor(when(col("__keep"), xxhash64(col(idCol).cast("string")))
+                .otherwise(0L)).as("h")).head()
+            val newSig = (sr.getLong(0), sr.getLong(1), sr.getLong(2))
+            cur.unpersist(false)
+            cur = next
+            converged = newSig == sig
+            sig = newSig
+          }
         }
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"skip-greedy fill did not converge in $maxPasses passes " +
-            "(adversarial token-size alternation?) — raise maxPasses")
-      // converged: cur's flags equal the previous pass's, so __sb (computed
-      // from the previous flags) IS the final kept-only prefix sum
-      val out = cur.where(col("__keep"))
-        .select(col(idCol), col("n_tokens"),
-          (col("__sb") + col("n_tokens")).as("cum_tokens"))
-      CacheOps.materializeAndRelease(out, cur)
-    } catch {
-      case e: Throwable => cur.unpersist(false); throw e
+        if (!converged)
+          throw new IllegalStateException(
+            s"skip-greedy fill did not converge in $maxPasses passes " +
+              "(adversarial token-size alternation?) — raise maxPasses")
+        // converged: cur's flags equal the previous pass's, so __sb (computed
+        // from the previous flags) IS the final kept-only prefix sum
+        cur.where(col("__keep"))
+          .select(col(idCol), col("n_tokens"),
+            (col("__sb") + col("n_tokens")).as("cum_tokens"))
+          .localCheckpoint(true)
+      } finally cur.unpersist(false)
     }
   }
 
@@ -319,36 +277,19 @@ object Selection {
   }
 
   /** Distributed GLOBAL rank 1..N by (`scoreCol` DESC NULLS LAST, `idCol`
-    * ASC) — the same range-partition + driver-prefix recipe as
-    * [[selectByBudget]], here counting ROWS instead of tokens: a range
-    * shuffle orders the corpus, per-partition row counts are prefix-scanned
-    * on the driver (O(partitions) longs), and each partition's local
-    * `row_number` is offset by the rows before it. No single-partition
-    * global window at any corpus size. NULL scores rank after every real
-    * score (deterministically, by id). */
+    * ASC): a [[RangeScan]] row count plus the partition-local
+    * `row_number`. NULL scores rank after every real score
+    * (deterministically, by id). */
   private[operators] def globalRank(df: DataFrame, idCol: String,
-                                    scoreCol: Column): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val base = df.select(col(idCol), scoreCol.as("__s"))
-      .repartitionByRange(p, col("__s").desc_nulls_last, col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = base.groupBy("__pid").agg(count(lit(1)).as("__c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until p).scanLeft(0L)((acc, i) =>
-      acc + counts.getOrElse(i, 0L))
-    val offsetOf = element_at(
-      map(offsets.take(p).zipWithIndex
-        .flatMap { case (o, i) => Seq(lit(i), lit(o)) }: _*),
-      col("__pid"))
-    val w = Window.partitionBy("__pid")
-      .orderBy(col("__s").desc_nulls_last, col(idCol))
-    val out = base
-      .withColumn("rank", offsetOf + row_number().over(w))
-      .select(col(idCol), col("rank"))
-    CacheOps.materializeAndRelease(out, base)
-  }
+                                    scoreCol: Column): DataFrame =
+    RangeScan(df.select(col(idCol), scoreCol.as("__s")), Nil,
+        Seq(col("__s").desc_nulls_last, col(idCol))) { scan =>
+      scan.frame
+        .withColumn("rank",
+          scan.offsets(count(lit(1))).column + row_number().over(scan.window))
+        .select(col(idCol), col("rank"))
+        .localCheckpoint(true)
+    }
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR'09) of several quality
     * signals: each score column is ranked globally (higher = better, ties
@@ -363,9 +304,8 @@ object Selection {
     * left-to-right fold of correctly-rounded divisions — bit-identical
     * across engines, no rounding needed.
     *
-    * Scale: one [[globalRank]] range shuffle per signal plus an id-keyed
-    * join to line the rank columns up — each piece is the distributed-scan
-    * shape, never a global single-partition sort. */
+    * Scale: one [[globalRank]] per signal plus an id-keyed join to line
+    * the rank columns up — never a global single-partition sort. */
   def reciprocalRankFusion(df: DataFrame, idCol: String,
                            scoreCols: Seq[String], k: Int = 60): DataFrame = {
     require(scoreCols.nonEmpty, "need at least one score column")

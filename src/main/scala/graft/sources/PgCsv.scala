@@ -103,9 +103,10 @@ object PgCsv {
     * the path resolves to must reach the parser under the codec's extension:
     * files already carrying it pass through; extension-less files are read
     * through a symlink that adds it (metadata only — no data copy; the
-    * lazily-read DataFrame keeps needing it, so cleanup is deferred to JVM
-    * exit). Directories and globs are enumerated file-by-file so an
-    * extension-less gzipped part can NEVER be silently parsed as plain text.
+    * lazily-read DataFrame keeps needing it, so the links live in a
+    * [[Scratch]] dir deleted at JVM exit). Directories and globs are
+    * enumerated file-by-file so an extension-less gzipped part can NEVER be
+    * silently parsed as plain text.
     * An empty or nonexistent input fails loudly with the flag's contract.
     *
     * Local-filesystem semantics by design: this mirrors the reference's
@@ -121,13 +122,8 @@ object PgCsv {
       throw new graft.operators.GraftException(
         s"compression='$codec': $why; got: $path " +
           "(rename the input or drop the flag)")
-    // one link dir per read; deleteOnExit runs in REVERSE registration order:
-    // register the dir first so links are removed before their parent
-    lazy val linkDir = {
-      val d = Files.createTempDirectory("graft-codec-")
-      d.toFile.deleteOnExit()
-      d
-    }
+    // one link dir per read, deleted with its links at JVM exit
+    lazy val linkDir = Scratch.dir("graft-codec-")
     val seq = new java.util.concurrent.atomic.AtomicInteger(0)
     def linked(f: File): String =
       if (f.getName.endsWith(ext)) f.getPath
@@ -136,7 +132,6 @@ object PgCsv {
         // different directories, which would collide in the shared link dir
         val link = linkDir.resolve(s"${seq.getAndIncrement()}-${f.getName}$ext")
         Files.createSymbolicLink(link, f.toPath.toAbsolutePath)
-        link.toFile.deleteOnExit()
         link.toString
       }
     // Hadoop/Spark data-file convention: names starting with '.' or '_' are

@@ -45,8 +45,7 @@ object ScaleSmoke {
     "x23b_ivfpq_topk", "x10c_curation_pipeline",
     "x07_asof_join", "x07e_asof_nearest",
     // round-12 selection surface: the budget fill and the decile assignment
-    // both ride the distributed-scan recipe (range partition + driver-side
-    // O(partitions) prefix scan) — the smoke checks the fit stays scan-bound
+    // both ride a RangeScan — the smoke checks the fit stays scan-bound
     "x36_select_budget", "x36e_quantile_buckets", "x36b_select_skip_greedy",
     "x36f_select_budget_per_source", "x37_line_scrub",
     // round-13: dup-ngram coverage is the data-bound one (position explode +

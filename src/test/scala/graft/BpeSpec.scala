@@ -72,7 +72,7 @@ class BpeSpec extends AnyFunSuite {
     val a = Bpe.train(corpus.repartition(7), "text", numMerges = 6)
     val b = Bpe.train(corpus.coalesce(1), "text", numMerges = 6)
     assert(a.merges == b.merges, "tie-breaks must make training partition-invariant")
-    val path = java.nio.file.Files.createTempDirectory("bpe").toString + "/model"
+    val path = graft.sources.Scratch.dir("bpe").toString + "/model"
     Bpe.save(spark, a, path)
     assert(Bpe.load(spark, path).merges == a.merges)
   }

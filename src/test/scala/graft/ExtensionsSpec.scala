@@ -448,7 +448,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val cents = SimilaritySearch.trainIvf(embs, "vec_id", "embedding",
       nlist = 8, refineIters = 2)
     // 1) the trained-index artifact survives a save/load cycle exactly
-    val centsPath = java.nio.file.Files.createTempDirectory("ivf-cents").toString
+    val centsPath = graft.sources.Scratch.dir("ivf-cents").toString
     SimilaritySearch.saveCentroids(spark, cents, centsPath)
     val loaded = SimilaritySearch.loadCentroids(spark, centsPath)
     assert(loaded.map(_.toSeq) == cents.map(_.toSeq),
@@ -461,7 +461,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .orderBy("query_id", "rank").collect().toSeq
     assert(fromDisk.nonEmpty && fromDisk == fromMemory)
     // 2) the materialized cell-partitioned index returns identical results
-    val idxPath = java.nio.file.Files.createTempDirectory("ivf-index").toString
+    val idxPath = graft.sources.Scratch.dir("ivf-index").toString
     SimilaritySearch.buildIvfIndex(embs, "vec_id", "embedding", cents, idxPath)
     val indexed = SimilaritySearch.ivfSearchIndexed(spark, idxPath, loaded,
         queries, "embedding", "vec_id", k = 5, nprobe = 3)
@@ -485,14 +485,14 @@ class ExtensionsSpec extends AnyFunSuite {
     // (embedded in the index), never retrain on the delta
     val cents = SimilaritySearch.trainIvf(base, "vec_id", "embedding",
       nlist = 8, refineIters = 1)
-    val idxPath = java.nio.file.Files.createTempDirectory("ivf-delta").toString
+    val idxPath = graft.sources.Scratch.dir("ivf-delta").toString
     SimilaritySearch.buildIvfIndex(base, "vec_id", "embedding", cents, idxPath)
     SimilaritySearch.appendToIvfIndex(delta, "vec_id", "embedding", idxPath)
     val appended = SimilaritySearch.ivfSearchIndexed(spark, idxPath,
         queries, "embedding", "vec_id", k = 5, nprobe = 3)
       .orderBy("query_id", "rank").collect().toSeq
     // rebuilt from scratch on the union, SAME quantizer
-    val rebuiltPath = java.nio.file.Files.createTempDirectory("ivf-rebuilt").toString
+    val rebuiltPath = graft.sources.Scratch.dir("ivf-rebuilt").toString
     SimilaritySearch.buildIvfIndex(base.unionAll(delta), "vec_id", "embedding",
       cents, rebuiltPath)
     val rebuilt = SimilaritySearch.ivfSearchIndexed(spark, rebuiltPath,
@@ -1071,7 +1071,7 @@ class ExtensionsSpec extends AnyFunSuite {
   test("dedupeAgainstFuzzy inside foreachBatch needs no registration before start()") {
     val fresh = freshSession()
     import fresh.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sfuzzy-fresh").toString
+    val dir = graft.sources.Scratch.dir("sfuzzy-fresh").toString
     val seen = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"))
       .toDF("doc_id", "text")

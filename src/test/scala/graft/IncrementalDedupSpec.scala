@@ -118,7 +118,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
         "doc_id", "text", minJaccard = 0.5, bands = 16)
       .select("new_id", "seen_id").as[(Long, Long)].collect().toSet
     assert(viaIndex == direct)
-    val path = java.nio.file.Files.createTempDirectory("ndidx").toString + "/idx"
+    val path = graft.sources.Scratch.dir("ndidx").toString + "/idx"
     index.write.mode("overwrite").parquet(path)
     val reloaded = NearDup.nearDuplicatesAgainstIndex(fresh,
         spark.read.parquet(path), "doc_id", "text", minJaccard = 0.5, bands = 16)

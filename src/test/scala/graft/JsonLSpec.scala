@@ -24,7 +24,7 @@ class JsonLSpec extends AnyFunSuite {
   private def df = rows.toDF("doc_id", "text", "score")
 
   test("single-file round-trip is lossless incl. nulls, unicode, escapes; count returned") {
-    val f = Files.createTempDirectory("jsonl").toString + "/out.jsonl"
+    val f = graft.sources.Scratch.dir("jsonl").toString + "/out.jsonl"
     val n = JsonL.writeSingleFile(df, f)
     assert(n == 3)
     val back = JsonL.read(spark, f, schema)
@@ -39,7 +39,7 @@ class JsonLSpec extends AnyFunSuite {
   }
 
   test("gzip round-trip through both writeDir and writeSingleFile") {
-    val dir = Files.createTempDirectory("jsonlgz").toString
+    val dir = graft.sources.Scratch.dir("jsonlgz").toString
     JsonL.writeDir(df, s"$dir/parts", gzip = true)
     val backDir = JsonL.read(spark, s"$dir/parts", schema)
     assert(backDir.count() == 3)
@@ -56,7 +56,7 @@ class JsonLSpec extends AnyFunSuite {
   }
 
   test("corrupt lines: FAILFAST raises, permissive captures them in _corrupt_record") {
-    val dir = Files.createTempDirectory("jsonlbad").toString
+    val dir = graft.sources.Scratch.dir("jsonlbad").toString
     val f = s"$dir/bad.jsonl"
     java.nio.file.Files.write(java.nio.file.Paths.get(f),
       "{\"doc_id\":1,\"text\":\"ok\",\"score\":1.0}\nNOT JSON AT ALL\n".getBytes("UTF-8"))
@@ -77,7 +77,7 @@ class JsonLSpec extends AnyFunSuite {
   }
 
   test("streaming JSONL ingest lands arriving files as micro-batches") {
-    val dir = Files.createTempDirectory("jsonlstream").toString
+    val dir = graft.sources.Scratch.dir("jsonlstream").toString
     def drop(name: String, content: String): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name"),
         content.getBytes("UTF-8"))

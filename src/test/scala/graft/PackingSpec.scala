@@ -63,8 +63,9 @@ class PackingSpec extends AnyFunSuite {
       off += n; r
     }.toSeq
     for (p <- Seq(1, 3, 32)) {
-      val got = Packing.packSequences(d, "doc_id",
-          graft.functions.TextAnalysis.tokenCount(col("text")), cap, partitions = p)
+      val got = TestSpark.withConf("spark.sql.shuffle.partitions" -> p.toString)(
+          Packing.packSequences(d, "doc_id",
+            graft.functions.TextAnalysis.tokenCount(col("text")), cap))
         .orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         .toSeq
@@ -87,7 +88,8 @@ class PackingSpec extends AnyFunSuite {
         val r = (id, n, off, off / cap, (off + math.max(n, 1) - 1) / cap)
         off += n; r
       }
-      val got = Packing.packSequences(df, "doc_id", col("n"), cap, partitions = 4)
+      val got = TestSpark.withConf("spark.sql.shuffle.partitions" -> "4")(
+          Packing.packSequences(df, "doc_id", col("n"), cap))
         .orderBy("doc_id", "n_tokens", "start_offset").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         .toSeq

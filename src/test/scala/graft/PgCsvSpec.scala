@@ -6,7 +6,6 @@ import org.scalacheck.rng.Seed
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import graft.sources.{CsvDialect, PgCsv}
-import java.nio.file.Files
 
 /** CSV dialect round-trip — the riskiest parity area (SURVEY.md §7.4#1):
   * NULL vs empty string, embedded delimiters/quotes/newlines, gzip. Modeled
@@ -20,7 +19,7 @@ class PgCsvSpec extends AnyFunSuite {
 
   private def roundTrip(rows: Seq[(String, String)],
                         dialect: CsvDialect = CsvDialect()): Seq[(String, String)] = {
-    val dir = Files.createTempDirectory("pgcsv").toString
+    val dir = graft.sources.Scratch.dir("pgcsv").toString
     val path = s"$dir/out.csv" + (if (dialect.compression.contains("gzip")) ".gz" else "")
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r => Row(r._1, r._2)), 2), schema)
@@ -40,7 +39,7 @@ class PgCsvSpec extends AnyFunSuite {
   }
 
   test("gzip round-trip produces a readable gzip file with header") {
-    val dir = Files.createTempDirectory("pgcsvgz").toString
+    val dir = graft.sources.Scratch.dir("pgcsvgz").toString
     val path = s"$dir/out.csv.gz"
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row("1", "2"), Row("3", null)), 2), schema)
@@ -61,7 +60,7 @@ class PgCsvSpec extends AnyFunSuite {
 
   test("row count from writeSingleFile matches") {
     val rows = (1 to 57).map(i => (s"k$i", s"v$i"))
-    val dir = Files.createTempDirectory("pgcsvn").toString
+    val dir = graft.sources.Scratch.dir("pgcsvn").toString
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r => Row(r._1, r._2)), 3), schema)
     assert(PgCsv.writeSingleFile(df, s"$dir/n.csv", CsvDialect()) == 57)

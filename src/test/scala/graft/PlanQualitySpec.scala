@@ -144,7 +144,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("date-partitioned layout prunes partitions at planning time") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("evpart").toString
+    val dir = graft.sources.Scratch.dir("evpart").toString
     val ev = graft.sources.Tables.table(spark, TestSpark.sf0001, "events")
       .withColumn("event_date", to_date(col("ts")))
     graft.sources.Bucketing.writePartitioned(ev, dir, Seq("event_date"))
@@ -246,7 +246,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val nlist = 8
     val cents = graft.operators.SimilaritySearch.trainIvf(
       embs, "vec_id", "embedding", nlist = nlist, refineIters = 1)
-    val idx = java.nio.file.Files.createTempDirectory("ivf-prune").toString
+    val idx = graft.sources.Scratch.dir("ivf-prune").toString
     graft.operators.SimilaritySearch.buildIvfIndex(
       embs, "vec_id", "embedding", cents, idx)
     // all nlist cells are populated, so pruning (not an empty index) is what
@@ -588,7 +588,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("x111 ORC reads push filters and prune columns like parquet") {
     val docs = graft.sources.Tables.table(spark, TestSpark.sf0001, "documents")
-    val tmp = java.nio.file.Files.createTempDirectory("orc-plan").toString
+    val tmp = graft.sources.Scratch.dir("orc-plan").toString
     docs.write.mode("overwrite").orc(tmp)
     val q = spark.read.orc(tmp).where(col("n_chars") >= 200)
       .select("doc_id", "n_chars")

@@ -269,7 +269,7 @@ class PqSpec extends AnyFunSuite {
         .select("vec_id", "pq_code").collect()
         .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
     assert(codesOf(corpus.repartition(7)) == codesOf(corpus.coalesce(1)))
-    val path = java.nio.file.Files.createTempDirectory("pqmodel").toString + "/model"
+    val path = graft.sources.Scratch.dir("pqmodel").toString + "/model"
     ProductQuantization.savePqModel(spark, cb, path)
     val loaded = ProductQuantization.loadPqModel(spark, path)
     assert(loaded.map(_.map(_.toSeq)) == cb.map(_.map(_.toSeq)),
@@ -319,7 +319,7 @@ class PqSpec extends AnyFunSuite {
     val nlist = 4
     val cb = ProductQuantization.trainPq(corpus, "vec_id", "embedding", dim, m, ksub = 8, iters = 1)
     val cents = SimilaritySearch.trainIvf(corpus, "vec_id", "embedding", nlist, refineIters = 1)
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq").toString + "/index"
+    val idx = graft.sources.Scratch.dir("ivfpq").toString + "/index"
     ProductQuantization.buildIvfPqIndex(corpus, "vec_id", "embedding", cents, cb, idx)
     val queries = corpus.where(col("vec_id") < 3)
     val viaIndex = ProductQuantization.ivfPqSearchIndexed(spark, idx, queries,
@@ -362,7 +362,7 @@ class PqSpec extends AnyFunSuite {
     val cents = SimilaritySearch.trainIvf(corpus, "vec_id", "embedding", nlist, refineIters = 1)
     val residuals = ProductQuantization.residualsOf(corpus, "vec_id", "embedding", cents)
     val cbRes = ProductQuantization.trainPq(residuals, "vec_id", "residual", dim, m, ksub = 4, iters = 1)
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq-res").toString + "/index"
+    val idx = graft.sources.Scratch.dir("ivfpq-res").toString + "/index"
     ProductQuantization.buildIvfPqIndex(corpus, "vec_id", "embedding", cents, cbRes,
       idx, residual = true)
     val queries = corpus.where(col("vec_id") < 3)
@@ -384,7 +384,7 @@ class PqSpec extends AnyFunSuite {
     val nlist = 3
     val cb = ProductQuantization.trainPq(corpus, "vec_id", "embedding", dim, m, ksub = 4, iters = 0)
     val cents = SimilaritySearch.trainIvf(corpus, "vec_id", "embedding", nlist, refineIters = 0)
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq-bad").toString + "/index"
+    val idx = graft.sources.Scratch.dir("ivfpq-bad").toString + "/index"
     ProductQuantization.buildIvfPqIndex(corpus, "vec_id", "embedding", cents, cb,
       idx, residual = true)
     // corrupt the marker: present but unreadable must THROW (scoring residual

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -26,31 +26,25 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("Verify deletes every scratch dir its entries made when the JVM exits") {
-    val tmp = Files.createTempDirectory("registry-spec")
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) Files.list(p).iterator.asScala.foreach(rm)
-      Files.delete(p)
-    }
-    try {
-      val out = tmp.resolve("out")
-      val names = Seq("x101_streaming_enrich", "x24_jsonl_roundtrip")
-      val javaBin = s"${System.getProperty("java.home")}/bin/java"
-      val args = Seq(javaBin, "-Xmx1g") ++
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
-          .asScala.filter(_.startsWith("--add-opens")) ++
-        Seq("-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-          s"-Djava.io.tmpdir=$tmp", "-cp", System.getProperty("java.class.path"),
-          "graft.Verify", TestSpark.sf0001, out.toString) ++ names
-      val pb = new ProcessBuilder(args: _*).redirectErrorStream(true)
-      pb.environment().put("SPARK_GRAFT_CPUS", "2")
-      val p = pb.start()
-      val log = scala.io.Source.fromInputStream(p.getInputStream).mkString
-      val tail = log.linesIterator.toSeq.takeRight(40).mkString("\n")
-      assert(p.waitFor() == 0, tail)
-      names.foreach(n => assert(Files.isDirectory(out.resolve(n)), s"$n: no dump\n$tail"))
-      val left = Files.list(tmp).iterator.asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("graft-")).toSeq
-      assert(left.isEmpty, s"scratch dirs left behind: $left")
-    } finally rm(tmp)
+    val tmp = graft.sources.Scratch.dir("registry-spec")
+    val out = tmp.resolve("out")
+    val names = Seq("x101_streaming_enrich", "x24_jsonl_roundtrip")
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val args = Seq(javaBin, "-Xmx1g") ++
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+        .asScala.filter(_.startsWith("--add-opens")) ++
+      Seq("-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+        s"-Djava.io.tmpdir=$tmp", "-cp", System.getProperty("java.class.path"),
+        "graft.Verify", TestSpark.sf0001, out.toString) ++ names
+    val pb = new ProcessBuilder(args: _*).redirectErrorStream(true)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    val p = pb.start()
+    val log = scala.io.Source.fromInputStream(p.getInputStream).mkString
+    val tail = log.linesIterator.toSeq.takeRight(40).mkString("\n")
+    assert(p.waitFor() == 0, tail)
+    names.foreach(n => assert(Files.isDirectory(out.resolve(n)), s"$n: no dump\n$tail"))
+    val left = Files.list(tmp).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("graft-")).toSeq
+    assert(left.isEmpty, s"scratch dirs left behind: $left")
   }
 }

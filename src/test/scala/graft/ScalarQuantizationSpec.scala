@@ -75,7 +75,7 @@ class ScalarQuantizationSpec extends AnyFunSuite {
 
   test("artifact round-trips through parquet") {
     val p = ScalarQuantization.fit(emb, "embedding")
-    val path = java.nio.file.Files.createTempDirectory("sq").toString + "/params"
+    val path = graft.sources.Scratch.dir("sq").toString + "/params"
     ScalarQuantization.save(spark, p, path)
     val loaded = ScalarQuantization.load(spark, path)
     assert(loaded.mins.toSeq == p.mins.toSeq && loaded.maxs.toSeq == p.maxs.toSeq)

@@ -13,7 +13,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
 
   private val copies = 3
   private lazy val outDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("scale_smoke_spec").toString
+    val d = graft.sources.Scratch.dir("scale_smoke_spec").toString
     ScaleSmoke.buildScaledDir(spark, TestSpark.sf0001, d, copies)
     d
   }

@@ -287,6 +287,11 @@ class SelectionSpec extends AnyFunSuite {
     val m = Percentiles.exactByGroupRanged(mixed, "g", "v", Seq(0.5), Seq("p50"))
       .orderBy("g").collect()
     assert(m(0).getDouble(1) == 2.0 && m(1).isNullAt(1))
+    // no group has a value: every group keeps NULL percentiles
+    val allNull = Seq(("a", Option.empty[Double]), ("b", None)).toDF("g", "v")
+    val n = Percentiles.exactByGroupRanged(allNull, "g", "v", Seq(0.5), Seq("p50"))
+      .collect()
+    assert(n.length == 2 && n.forall(_.isNullAt(1)))
     // bounded-group guard
     intercept[IllegalArgumentException] {
       Percentiles.exactByGroupRanged(

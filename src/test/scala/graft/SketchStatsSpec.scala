@@ -100,12 +100,12 @@ class SketchStatsSpec extends AnyFunSuite {
     val df = keyed(1, 500)
     val art = SketchStats.hllSketch(df, col("key"))
     val before = SketchStats.estimate(art)
-    val path = java.nio.file.Files.createTempDirectory("hll").toString + "/art"
+    val path = graft.sources.Scratch.dir("hll").toString + "/art"
     SketchStats.save(art, path)
     assert(SketchStats.estimate(SketchStats.load(spark, path)) == before,
       "save/load must not change the sketch")
     val theta = SketchStats.thetaSketch(df, col("key"))
-    val tPath = java.nio.file.Files.createTempDirectory("theta").toString + "/art"
+    val tPath = graft.sources.Scratch.dir("theta").toString + "/art"
     SketchStats.save(theta, tPath)
     assert(SketchStats.estimate(SketchStats.load(spark, tPath)) == 500L,
       "theta below threshold is exact, and save/load preserves it")
@@ -173,7 +173,7 @@ class SketchStatsSpec extends AnyFunSuite {
 
   test("KLL: artifact round-trips through parquet") {
     val df = (1L to 800L).map(i => ("g", i.toDouble)).toDF("grp", "v")
-    val p = java.nio.file.Files.createTempDirectory("kll_art").toString + "/a"
+    val p = graft.sources.Scratch.dir("kll_art").toString + "/a"
     SketchStats.save(SketchStats.kllSketchByGroup(df, "grp", col("v")), p)
     val q = SketchStats.load(spark, p)
       .select(SketchStats.kllQuantile(col("sketch"), 0.5)).head().getDouble(0)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -13,7 +12,7 @@ class StreamingCusumSpec extends AnyFunSuite {
   /** Hand series split 2/2/2 across three ordered micro-batches. */
   private def replay(xs: Seq[Double], target: Double, k: Double, h: Double,
                      batchSize: Int = 2): Seq[(Long, Double, Double, Boolean, Boolean)] = {
-    val dir = Files.createTempDirectory("graft-scusum")
+    val dir = graft.sources.Scratch.dir("graft-scusum")
     val ingest = dir.resolve("in").toString
     val rows = xs.zipWithIndex.map { case (x, i) =>
       ("a", i.toLong, x, target, k, h)
@@ -71,7 +70,7 @@ class StreamingCusumSpec extends AnyFunSuite {
   }
 
   test("out-of-order delivery across batches fails loudly") {
-    val dir = Files.createTempDirectory("graft-scusum-ooo")
+    val dir = graft.sources.Scratch.dir("graft-scusum-ooo")
     val ingest = dir.resolve("in").toString
     Seq(("a", 5L, 1.0, 0.0, 0.0, 9.0)).toDF("key", "ord", "value",
       "target", "allow", "thresh")

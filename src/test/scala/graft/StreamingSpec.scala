@@ -15,7 +15,7 @@ class StreamingSpec extends AnyFunSuite {
   /** Events split across 3 parquet files → 3 micro-batches at
     * maxFilesPerTrigger=1. */
   private lazy val streamDir: String = {
-    val dir = Files.createTempDirectory("events-stream").toString
+    val dir = graft.sources.Scratch.dir("events-stream").toString
     val ev = graft.sources.Tables.table(spark, TestSpark.sf0001, "events")
     ev.repartitionByRange(3, col("event_id")).write.mode("overwrite").parquet(dir)
     dir
@@ -79,7 +79,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch sink lands micro-batches in a catalog table") {
     spark.sql("DROP TABLE IF EXISTS stream_sink")
     spark.sql("CREATE TABLE stream_sink (h TIMESTAMP, event_type STRING, n BIGINT, sv DOUBLE) USING parquet")
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val ckpt = graft.sources.Scratch.dir("ckpt").toString
     val q = EventStreams.writeToTable(
       EventStreams.tumblingCounts(EventStreams.readEvents(spark, streamDir)),
       "stream_sink", ckpt).start()
@@ -90,7 +90,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-static enrichment joins each micro-batch against the dim, left-preserving") {
-    val dir = Files.createTempDirectory("senrich").toString
+    val dir = graft.sources.Scratch.dir("senrich").toString
     import spark.implicits._
     def write(rows: Seq[(Long, Long)]): Unit =
       rows.toDF("event_id", "user_id")
@@ -126,7 +126,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-static blocklist drops listed keys in every micro-batch, keeps the rest once") {
-    val dir = Files.createTempDirectory("sblock").toString
+    val dir = graft.sources.Scratch.dir("sblock").toString
     import spark.implicits._
     def write(rows: Seq[(Long, Long)]): Unit =
       rows.toDF("event_id", "user_id")
@@ -152,7 +152,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dedup keeps first arrival per key across micro-batches") {
-    val dir = Files.createTempDirectory("sdedup").toString
+    val dir = graft.sources.Scratch.dir("sdedup").toString
     import spark.implicits._
     def write(rows: Seq[(Long, String, Long)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id")
@@ -176,7 +176,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("latestPerKey maintains the current row per key across micro-batches, out-of-order safe") {
-    val dir = Files.createTempDirectory("slatest").toString
+    val dir = graft.sources.Scratch.dir("slatest").toString
     import spark.implicits._
     def write(rows: Seq[(Long, String, Long, Double)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id", "value")
@@ -218,7 +218,7 @@ class StreamingSpec extends AnyFunSuite {
     // side: the anti-join is stream-static (static seen keys, re-read per
     // micro-batch), so continuous ingest composes with cross-snapshot dedup
     // without a second implementation.
-    val dir = Files.createTempDirectory("sdagainst").toString
+    val dir = graft.sources.Scratch.dir("sdagainst").toString
     import spark.implicits._
     val seen = Seq((1L, "kept text one"), (2L, "kept text two")).toDF("doc_id", "text")
     def write(rows: Seq[(Long, String)]): Unit =
@@ -244,7 +244,7 @@ class StreamingSpec extends AnyFunSuite {
     // foreachBatch is the supported bridge: each arriving micro-batch is
     // fuzzy-deduped against the static kept corpus with the SAME operator
     // the batch path uses — no second implementation, no semantic fork.
-    val dir = Files.createTempDirectory("sfuzzy").toString
+    val dir = graft.sources.Scratch.dir("sfuzzy").toString
     import spark.implicits._
     val seen = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"))
@@ -278,8 +278,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-stream interval join pairs events within the bound, across micro-batches") {
     import spark.implicits._
-    val ldir = Files.createTempDirectory("ssj-l").toString
-    val rdir = Files.createTempDirectory("ssj-r").toString
+    val ldir = graft.sources.Scratch.dir("ssj-l").toString
+    val rdir = graft.sources.Scratch.dir("ssj-r").toString
     def write(dir: String, rows: Seq[(Long, String, Long)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id")
         .select(col("event_id"), col("ts_s").cast("timestamp_ntz").as("ts"),
@@ -310,8 +310,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("left-outer interval join: never-matched left row null-pads exactly once at watermark expiry") {
     import spark.implicits._
-    val ldir = Files.createTempDirectory("ssjlo-l").toString
-    val rdir = Files.createTempDirectory("ssjlo-r").toString
+    val ldir = graft.sources.Scratch.dir("ssjlo-l").toString
+    val rdir = graft.sources.Scratch.dir("ssjlo-r").toString
     def write(dir: String, rows: Seq[(Long, String, Long)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id")
         .select(col("event_id"), col("ts_s").cast("timestamp_ntz").as("ts"),
@@ -354,8 +354,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("full-outer interval join: BOTH sides' never-matched rows null-pad exactly once") {
     import spark.implicits._
-    val ldir = Files.createTempDirectory("ssjfo-l").toString
-    val rdir = Files.createTempDirectory("ssjfo-r").toString
+    val ldir = graft.sources.Scratch.dir("ssjfo-l").toString
+    val rdir = graft.sources.Scratch.dir("ssjfo-r").toString
     def write(dir: String, rows: Seq[(Long, String, Long)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id")
         .select(col("event_id"), col("ts_s").cast("timestamp_ntz").as("ts"),
@@ -397,8 +397,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("interval-join state is evicted as the watermark advances (long replay plateaus)") {
     import spark.implicits._
-    val ldir = Files.createTempDirectory("ssjst-l").toString
-    val rdir = Files.createTempDirectory("ssjst-r").toString
+    val ldir = graft.sources.Scratch.dir("ssjst-l").toString
+    val rdir = graft.sources.Scratch.dir("ssjst-r").toString
     def write(dir: String, rows: Seq[(Long, String, Long)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id")
         .select(col("event_id"), col("ts_s").cast("timestamp_ntz").as("ts"),
@@ -436,7 +436,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("flatMapGroupsWithState emits sessions as they close (gap or timeout)") {
-    val dir = Files.createTempDirectory("fmgws").toString
+    val dir = graft.sources.Scratch.dir("fmgws").toString
     import spark.implicits._
     def write(rows: Seq[(Long, String, Long)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id")
@@ -479,7 +479,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("two adjacent latecomers merge into ONE closed session, not two singletons") {
-    val dir = Files.createTempDirectory("fmgws2").toString
+    val dir = graft.sources.Scratch.dir("fmgws2").toString
     import spark.implicits._
     def write(rows: Seq[(Long, String, Long)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id")
@@ -519,7 +519,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("multiple open sessions per user drain in watermark order") {
-    val dir = Files.createTempDirectory("fmgws3").toString
+    val dir = graft.sources.Scratch.dir("fmgws3").toString
     import spark.implicits._
     def write(rows: Seq[(Long, String, Long)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id")
@@ -597,7 +597,7 @@ class StreamingSpec extends AnyFunSuite {
       pmod(col("event_id"), lit(3)).cast("int"),
       pmod(col("user_id"), lit(3)).cast("int"))
     splits.zipWithIndex.foreach { case (splitExpr, k) =>
-      val dir = Files.createTempDirectory(s"perm$k").toString
+      val dir = graft.sources.Scratch.dir(s"perm$k").toString
       val tagged = ev.withColumn("b", splitExpr)
       for (b <- 0 until 3)
         tagged.where(col("b") === b).drop("b")
@@ -635,8 +635,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.sources.CsvDialect
     spark.sql("DROP TABLE IF EXISTS stream_copy")
     spark.sql("CREATE TABLE stream_copy (id INT, name STRING) USING parquet")
-    val dir = Files.createTempDirectory("csvstream").toString
-    val ckpt = Files.createTempDirectory("csvstream-ckpt").toString
+    val dir = graft.sources.Scratch.dir("csvstream").toString
+    val ckpt = graft.sources.Scratch.dir("csvstream-ckpt").toString
     // file 1 BEFORE start; unquoted empty = NULL, quoted "" = empty string
     Files.writeString(java.nio.file.Paths.get(s"$dir/f1.csv"),
       "id,name\n1,alpha\n2,\n3,\"\"\n")
@@ -663,8 +663,8 @@ class StreamingSpec extends AnyFunSuite {
   test("continuous COPY checkpoint recovery: replayed batch lands exactly once") {
     spark.sql("DROP TABLE IF EXISTS stream_copy_rec")
     spark.sql("CREATE TABLE stream_copy_rec (id INT, name STRING) USING parquet")
-    val dir = Files.createTempDirectory("csvrec").toString
-    val ckpt = Files.createTempDirectory("csvrec-ckpt").toString
+    val dir = graft.sources.Scratch.dir("csvrec").toString
+    val ckpt = graft.sources.Scratch.dir("csvrec-ckpt").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/f1.csv"),
       "id,name\n1,a\n2,b\n")
     val q1 = graft.operators.CsvToTable.streamToTable(
@@ -696,7 +696,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("late data beyond the watermark is dropped in append mode") {
-    val dir = Files.createTempDirectory("late").toString
+    val dir = graft.sources.Scratch.dir("late").toString
     import spark.implicits._
     def write(name: String, rows: Seq[(Long, String, Long, String, Double, String)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
@@ -736,7 +736,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("curatedIngest: streaming equals the batch spelling of the same gate") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("docs-stream").toString
+    val dir = graft.sources.Scratch.dir("docs-stream").toString
     val docs = graft.sources.Tables.table(spark, TestSpark.sf0001, "documents")
     docs.repartitionByRange(3, col("doc_id")).write.mode("overwrite").parquet(dir)
     val streamed = graft.streaming.DocumentStreams.curatedIngest(
@@ -751,7 +751,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("dedupedIngest suppresses duplicates ACROSS micro-batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("docs-dedup").toString
+    val dir = graft.sources.Scratch.dir("docs-dedup").toString
     def row(id: Long, text: String) =
       (id, text, "en", "src0", text.length.toLong)
     def write(rows: Seq[(Long, String, String, String, Long)]): Unit =
@@ -779,7 +779,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("dedupedIngestWithinWatermark dedups inside the event-time window") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("docs-wm").toString
+    val dir = graft.sources.Scratch.dir("docs-wm").toString
     Seq(
       (1L, prose(1), "en", "src0", "2024-01-01 10:00:00"),
       (2L, prose(1), "en", "src0", "2024-01-01 10:02:00"), // dup, in-window
@@ -805,18 +805,18 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     // 2 parquet files → 2 micro-batches; tiny vocab → HLL exact regime, so
     // the streamed fold must land on the batch-union exact distinct counts
-    val dir = Files.createTempDirectory("vocab-stream").toString
+    val dir = graft.sources.Scratch.dir("vocab-stream").toString
     Seq(("en", "alpha beta gamma"), ("de", "eins zwei"))
       .toDF("lang", "text").write.parquet(dir + "/b1")
     Seq(("en", "beta delta"), ("fr", "un"))
       .toDF("lang", "text").write.parquet(dir + "/b2")
     val all = spark.read.parquet(dir + "/b1", dir + "/b2")
-    val statePath = Files.createTempDirectory("vocab-state").toString + "/state"
+    val statePath = graft.sources.Scratch.dir("vocab-state").toString + "/state"
     val src = spark.readStream.schema(all.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir + "/b*")
     val q = graft.streaming.DocumentStreams.vocabTracker(
       src, "lang", "text", statePath,
-      Files.createTempDirectory("vocab-ckpt").toString)
+      graft.sources.Scratch.dir("vocab-ckpt").toString)
     try q.processAllAvailable() finally q.stop()
     val est = graft.operators.SketchStats.load(spark, statePath)
       .select(col("__lang"),
@@ -831,7 +831,7 @@ class StreamingSpec extends AnyFunSuite {
     // far-future sentinel to ratchet the watermark twice — the x146 shape.
     // Values chosen so the edge fold's tie rule matters: 5.0 sits ON an edge
     // and must land in the HIGHER bin (x >= edge) on both paths.
-    val dir = Files.createTempDirectory("hist-stream").toString
+    val dir = graft.sources.Scratch.dir("hist-stream").toString
     def ts(day: Long) = new java.sql.Timestamp(day * 86400000L)
     val p1 = Seq((ts(10), 1.0), (ts(11), 5.0), (ts(12), 9.0), (ts(13), 5.0))
     val p2 = Seq((ts(20), 2.0), (ts(21), 7.0), (ts(22), 7.0))
@@ -847,12 +847,12 @@ class StreamingSpec extends AnyFunSuite {
     val edges = Seq(5.0)
     val src = spark.readStream.schema("ts TIMESTAMP, value DOUBLE")
       .option("maxFilesPerTrigger", 1).parquet(dir + "/b*")
-    val sink = Files.createTempDirectory("hist-sink").toString
+    val sink = graft.sources.Scratch.dir("hist-sink").toString
     val q = EventStreams.binnedHistogram(src, "value", edges,
         window_ = "10 days", watermark = "0 seconds")
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        Files.createTempDirectory("hist-ckpt").toString)
+        graft.sources.Scratch.dir("hist-ckpt").toString)
       .format("parquet").option("path", sink).start()
     def flush(day: Long): Unit =
       Seq((ts(day), 0.0)).toDF("ts", "value")

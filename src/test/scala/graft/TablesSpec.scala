@@ -45,7 +45,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   private def fixtureCopy(names: String*): Path = {
-    val dir = Files.createTempDirectory("tables")
+    val dir = graft.sources.Scratch.dir("tables")
     names.foreach(n => Files.copy(Paths.get(TestSpark.sf0001, s"$n.parquet"),
       dir.resolve(s"$n.parquet")))
     dir
@@ -69,7 +69,7 @@ class TablesSpec extends AnyFunSuite {
     val dir = fixtureCopy("region")
     val s = spark.newSession()
     assert(Tables.table(s, dir.toString, "region").count() == 5)
-    val staged = Files.createTempDirectory("tables-rewrite").resolve("r")
+    val staged = graft.sources.Scratch.dir("tables-rewrite").resolve("r")
     s.range(3).selectExpr("id AS r_regionkey", "'x' AS r_name", "id * 10 AS r_extra")
       .coalesce(1).write.parquet(staged.toString)
     val part = Files.list(staged).filter(_.getFileName.toString.endsWith(".parquet"))

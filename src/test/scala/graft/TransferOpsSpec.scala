@@ -13,7 +13,7 @@ class TransferOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def tmp(name: String) =
-    Files.createTempDirectory("xfer").resolve(name).toString
+    graft.sources.Scratch.dir("xfer").resolve(name).toString
 
   test("QueryToCsv: header, row count, exact path (test_operators.py:76-87)") {
     graft.sources.Tables.registerAll(spark, TestSpark.sf0001)
@@ -261,7 +261,7 @@ class TransferOpsSpec extends AnyFunSuite {
   }
 
   test("compression flag on an empty directory or missing path fails loudly, never loads garbage") {
-    val dir = Files.createTempDirectory("gzdir").toString
+    val dir = graft.sources.Scratch.dir("gzdir").toString
     intercept[GraftException] {
       graft.sources.PgCsv.read(spark, dir,
         CsvDialect(compression = Some("gzip")))
@@ -273,7 +273,7 @@ class TransferOpsSpec extends AnyFunSuite {
   }
 
   test("compression flag on a directory of .csv.gz parts round-trips (E8 dir contract)") {
-    val dir = Files.createTempDirectory("gzparts").toString
+    val dir = graft.sources.Scratch.dir("gzparts").toString
     for (i <- 0 until 3) {
       val out = new java.util.zip.GZIPOutputStream(
         new java.io.FileOutputStream(s"$dir/part-0000$i.csv.gz"))
@@ -290,7 +290,7 @@ class TransferOpsSpec extends AnyFunSuite {
     // the reference keys decompression on the flag, not the filename — a
     // directory of gzipped parts named plain .csv must decompress via the
     // same symlink mapping as the single-file path, never parse as text
-    val dir = Files.createTempDirectory("gzflagdir").toString
+    val dir = graft.sources.Scratch.dir("gzflagdir").toString
     for (i <- 0 until 3) {
       val out = new java.util.zip.GZIPOutputStream(
         new java.io.FileOutputStream(s"$dir/part-0000$i.csv"))
@@ -305,7 +305,7 @@ class TransferOpsSpec extends AnyFunSuite {
   }
 
   test("compression flag recurses into partitioned (nested) directory layouts") {
-    val dir = Files.createTempDirectory("gznest").toString
+    val dir = graft.sources.Scratch.dir("gznest").toString
     new java.io.File(s"$dir/lang=en").mkdirs()
     new java.io.File(s"$dir/lang=de").mkdirs()
     new java.io.File(s"$dir/.hiddendir").mkdirs()
@@ -324,7 +324,7 @@ class TransferOpsSpec extends AnyFunSuite {
   }
 
   test("compression flag glob expansion skips hidden files (_SUCCESS, .crc)") {
-    val dir = Files.createTempDirectory("gzhidden").toString
+    val dir = graft.sources.Scratch.dir("gzhidden").toString
     val o = new java.util.zip.GZIPOutputStream(
       new java.io.FileOutputStream(s"$dir/part-0.csv"))
     o.write("5\n".getBytes("UTF-8")); o.close()
@@ -337,7 +337,7 @@ class TransferOpsSpec extends AnyFunSuite {
   }
 
   test("compression flag on a glob of extension-less gzipped parts decompresses each match") {
-    val dir = Files.createTempDirectory("gzglob").toString
+    val dir = graft.sources.Scratch.dir("gzglob").toString
     for (i <- 0 until 2) {
       val out = new java.util.zip.GZIPOutputStream(
         new java.io.FileOutputStream(s"$dir/chunk-$i.csv"))

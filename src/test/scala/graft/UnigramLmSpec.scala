@@ -104,7 +104,7 @@ class UnigramLmSpec extends AnyFunSuite {
     val counts = UnigramLm.tokenCount(corpus, "text", m)
       .select("doc_id", "n_unigram_tokens").as[(Long, Int)].collect().toMap
     assert(counts.values.forall(_ > 0))
-    val path = java.nio.file.Files.createTempDirectory("uni").toString + "/model"
+    val path = graft.sources.Scratch.dir("uni").toString + "/model"
     UnigramLm.save(spark, m, path)
     val loaded = UnigramLm.load(spark, path)
     assert(loaded.pieces == m.pieces)

@@ -11,7 +11,7 @@ class ZoneMapSpec extends AnyFunSuite {
   /** Range-clustered fixture: 3 files with disjoint id ranges, plus one
     * file whose stat column is entirely NULL (unprunable). */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-zonemap").toString
+    val d = graft.sources.Scratch.dir("graft-zonemap").toString
     (1 to 30).map(i => (i.toLong, Some(i.toLong * 10), s"p$i")).toDF("id", "x", "payload")
       .repartitionByRange(3, col("id"))
       .write.mode("overwrite").parquet(d)
@@ -69,7 +69,7 @@ class ZoneMapSpec extends AnyFunSuite {
   }
 
   test("update: appended files merge to exactly the full rebuild; no-op when nothing is new") {
-    val d = java.nio.file.Files.createTempDirectory("graft-zonemap-inc")
+    val d = graft.sources.Scratch.dir("graft-zonemap-inc")
       .toString
     (1 to 10).map(i => (i.toLong, i.toLong * 10)).toDF("id", "x")
       .repartitionByRange(2, col("id"))
@@ -104,7 +104,7 @@ class ZoneMapSpec extends AnyFunSuite {
     // or every known file looks 'gone' / fresh appends go unseen (the
     // r18 fail-silent path: a non-recursive listing saw zero files and
     // returned the stale map unchanged)
-    val d = java.nio.file.Files.createTempDirectory("graft-zonemap-part")
+    val d = graft.sources.Scratch.dir("graft-zonemap-part")
       .toString
     (1 to 10).map(i => (i.toLong, i.toLong * 10, s"d${i % 2}"))
       .toDF("id", "x", "dt")
@@ -128,7 +128,7 @@ class ZoneMapSpec extends AnyFunSuite {
   }
 
   test("update: an empty/vanished layout refuses loudly instead of merging") {
-    val d = java.nio.file.Files.createTempDirectory("graft-zonemap-empty")
+    val d = graft.sources.Scratch.dir("graft-zonemap-empty")
       .toString
     (1 to 4).map(i => (i.toLong, i.toLong)).toDF("id", "x")
       .coalesce(1).write.mode("overwrite").parquet(d)
@@ -147,7 +147,7 @@ class ZoneMapSpec extends AnyFunSuite {
   }
 
   test("update: a map referencing vanished files refuses loudly") {
-    val d = java.nio.file.Files.createTempDirectory("graft-zonemap-gone")
+    val d = graft.sources.Scratch.dir("graft-zonemap-gone")
       .toString
     (1 to 6).map(i => (i.toLong, i.toLong)).toDF("id", "x")
       .repartitionByRange(2, col("id"))

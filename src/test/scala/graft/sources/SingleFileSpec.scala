@@ -14,7 +14,7 @@ class SingleFileSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
 
   private def target() = {
-    val dir = Files.createTempDirectory("single-file")
+    val dir = graft.sources.Scratch.dir("single-file")
     val t = dir.resolve("out.csv")
     Files.write(t, "id\n1\n2\n".getBytes(UTF_8))
     t
